@@ -22,7 +22,13 @@ Differences by design:
 - checkpoint advances only after the merge commits (swap completes),
   matching the at-least-once + idempotent-upsert story (T2/T3);
 - ``delta_mode="ge_dedup"`` fixes the reference's lost-equal-timestamp
-  edge (T5): re-read ``>=`` and let the keyed merge collapse replays.
+  edge (T5): re-read ``>=`` and let the keyed merge collapse replays;
+- the bookkeeping (history rows, checkpoint marks) is O(collections)
+  rows, so the driver writes it with pyarrow and it costs no Spark
+  job; a multi-collection run writes one history file per phase
+  (STARTED, then SUCCESS or FAILED), reads every mark once and
+  commits every advanced mark as one checkpoint version — the Spark
+  jobs of a sync cycle are its merges.
 """
 
 from __future__ import annotations
@@ -236,32 +242,60 @@ def reload_all_atomic(
         txn.commit()
     except Exception as exc:  # noqa: BLE001 — abort is all-or-nothing
         txn.abort()
-        now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
-        for table in frames:
-            history.record(
-                warehouse, source_name, table, "FAILED", started,
-                completed_at=now, message=str(exc)[:500],
-            )
+        _record_failed(warehouse, source_name, sorted(frames), started, exc)
         raise
     duration = time.monotonic() - t0
-    now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
-    results = []
-    for table in sorted(frames):
-        history.record(
-            warehouse, source_name, table, "SUCCESS", started,
-            completed_at=now, records_synced=counts[table],
+    results = [
+        SyncResult(
+            source=source_name,
+            collection=table,
+            records_synced=counts[table],
+            duration_sec=duration,
             message=f"Atomically reloaded {counts[table]} rows",
         )
-        results.append(
-            SyncResult(
-                source=source_name,
-                collection=table,
-                records_synced=counts[table],
-                duration_sec=duration,
-                message=f"Atomically reloaded {counts[table]} rows",
-            )
-        )
+        for table in sorted(frames)
+    ]
+    _record_success(warehouse, results, started)
     return results
+
+
+def _record_success(
+    warehouse: ParquetWarehouse, results: list[SyncResult], started: dt.datetime
+) -> None:
+    """One SUCCESS history row per result, written as one file."""
+    now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
+    history.append(
+        warehouse,
+        [
+            history.entry(
+                r.source, r.collection, "SUCCESS", started,
+                completed_at=now, records_synced=r.records_synced,
+                message=r.message,
+            )
+            for r in results
+        ],
+    )
+
+
+def _record_failed(
+    warehouse: ParquetWarehouse,
+    source_name: str,
+    tables: list[str],
+    started: dt.datetime,
+    exc: Exception,
+) -> None:
+    """One FAILED history row per table, written as one file."""
+    now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
+    history.append(
+        warehouse,
+        [
+            history.entry(
+                source_name, table, "FAILED", started,
+                completed_at=now, message=str(exc)[:500],
+            )
+            for table in tables
+        ],
+    )
 
 
 def sync_collections_atomic(
@@ -292,47 +326,49 @@ def sync_collections_atomic(
     t0 = time.monotonic()
     from pyspark.sql import types as T
 
-    batches: dict[str, DataFrame] = {}
-    for table, source_df in sorted(frames.items()):
-        history.record(warehouse, source_name, table, "STARTED", started)
-        last = checkpoint.get_last_synced(warehouse, source_name, table)
-        delta = delta_filter(source_df, cursor_col, last, settings.delta_mode)
-        cleaned = clean_records(delta, source_name=source_name)
-        if cursor_col not in cleaned.columns:
-            raise ValueError(
-                f"cursor column {cursor_col!r} missing from delta for "
-                f"{source_name}.{table}"
-            )
-        if isinstance(cleaned.schema[cursor_col].dataType, T.StringType):
-            cleaned = cleaned.withColumn(
-                cursor_col, F.col(cursor_col).cast("timestamp")
-            )
-        batches[table] = cleaned
-
+    tables = sorted(frames)
+    history.append(
+        warehouse,
+        [history.entry(source_name, t, "STARTED", started) for t in tables],
+    )
     try:
+        marks = checkpoint.get_marks(warehouse, source_name)
+        batches: dict[str, DataFrame] = {}
+        for table in tables:
+            delta = delta_filter(
+                frames[table], cursor_col, marks.get(table),
+                settings.delta_mode,
+            )
+            cleaned = clean_records(delta, source_name=source_name)
+            if cursor_col not in cleaned.columns:
+                raise ValueError(
+                    f"cursor column {cursor_col!r} missing from delta for "
+                    f"{source_name}.{table}"
+                )
+            if isinstance(cleaned.schema[cursor_col].dataType, T.StringType):
+                cleaned = cleaned.withColumn(
+                    cursor_col, F.col(cursor_col).cast("timestamp")
+                )
+            batches[table] = cleaned
         stats = merge_upsert_atomic(
             warehouse, batches, key=key, order_col=cursor_col
         )
     except Exception as exc:  # all-or-nothing: every table FAILED
-        now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
-        for table in frames:
-            history.record(
-                warehouse, source_name, table, "FAILED", started,
-                completed_at=now, message=str(exc)[:500],
-            )
+        _record_failed(warehouse, source_name, tables, started, exc)
         raise
 
     duration = time.monotonic() - t0
-    now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
-    results = []
-    for table in sorted(frames):
-        n, hwm = stats[table]
-        if hwm is not None:
-            checkpoint.set_last_synced(warehouse, source_name, table, hwm)
-        msg = f"Atomically synced {n} rows from {source_name}.{table}"
-        history.record(
-            warehouse, source_name, table, "SUCCESS", started,
-            completed_at=now, records_synced=n, message=msg,
+    checkpoint.set_marks(
+        warehouse,
+        source_name,
+        {t: hwm for t, (_, hwm) in stats.items() if hwm is not None},
+    )
+    results = [
+        SyncResult(
+            source_name, t, stats[t][0], duration,
+            f"Atomically synced {stats[t][0]} rows from {source_name}.{t}",
         )
-        results.append(SyncResult(source_name, table, n, duration, msg))
+        for t in tables
+    ]
+    _record_success(warehouse, results, started)
     return results

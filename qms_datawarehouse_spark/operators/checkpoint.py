@@ -4,20 +4,31 @@ Parity: /root/reference/src/core/db.py:43-50 (table: source_uri,
 collection_name, last_synced_at, PK(source_uri, collection_name)) and
 /root/reference/src/services/etl.py:89-126 (read + upsert).
 
-The table is tiny (one row per source×collection), so it lives as a
-single-version parquet dir with atomic swap; the upsert is the same
-keyed-merge idiom the data tables use. Reads are driver-side point
-lookups (S8) — a ``.first()`` on a filtered scan of a KB-scale table.
+The table is tiny (one row per source×collection), so the driver owns
+it: reads and writes go through pyarrow and launch no Spark job. Each
+commit is one new single-file version through the warehouse's
+``write_version`` compare-and-swap, so a reader resolving ``_CURRENT``
+sees every mark of one commit or none of them, and Spark readers
+(``warehouse.read``, ``register_views``) still see the declared
+``TimestampType`` column. A read is one pyarrow scan of the current
+version (S8); it also accepts versions Spark wrote, INT96 timestamps
+included.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import os
 
-from pyspark.sql import functions as F
+import pyarrow.parquet as pq
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
-from qms_datawarehouse_spark.warehouse import ParquetWarehouse
+from qms_datawarehouse_spark.warehouse import (
+    ConcurrentWriteError,
+    ParquetWarehouse,
+    arrow_table,
+)
 
 TABLE = "sync_metadata"
 
@@ -30,27 +41,99 @@ SCHEMA = T.StructType(
 )
 
 
+def _read_marks(
+    warehouse: ParquetWarehouse, version: str
+) -> dict[tuple[str, str], dt.datetime | None]:
+    """Every mark of one version, keyed (source_uri, collection_name),
+    as naive UTC. The cast to the declared schema turns a Spark-written
+    INT96 column (naive, UTC-based) into the same UTC type pyarrow
+    writes."""
+    vdir = os.path.join(warehouse.table_dir(TABLE), version)
+    schema = to_arrow_schema(SCHEMA)
+    rows = (
+        pq.read_table(vdir, coerce_int96_timestamp_unit="us")
+        .select(schema.names)
+        .cast(schema)
+        .to_pylist()
+    )
+    return {
+        (r["source_uri"], r["collection_name"]): (
+            r["last_synced_at"] and r["last_synced_at"].replace(tzinfo=None)
+        )
+        for r in rows
+    }
+
+
+def get_marks(
+    warehouse: ParquetWarehouse, source_uri: str
+) -> dict[str, dt.datetime | None]:
+    """Every collection's mark for ``source_uri``, in one read.
+
+    Values are naive UTC — the reference coerces with
+    ``replace(tzinfo=UTC)`` on read (etl.py:97-99)."""
+    base = warehouse.current_version_name(TABLE)
+    if base is None:
+        return {}
+    return {
+        coll: ts
+        for (src, coll), ts in _read_marks(warehouse, base).items()
+        if src == source_uri
+    }
+
+
 def get_last_synced(
     warehouse: ParquetWarehouse, source_uri: str, collection: str
 ) -> dt.datetime | None:
-    """S8 point lookup by composite key (parity: etl.py:89-100).
+    """S8 point lookup by composite key (parity: etl.py:89-100)."""
+    return get_marks(warehouse, source_uri).get(collection)
 
-    Naive values are interpreted as UTC — the reference coerces with
-    ``replace(tzinfo=UTC)`` on read (etl.py:97-99); here the session
-    timezone is pinned UTC so the parquet value round-trips unchanged.
+
+def set_marks(
+    warehouse: ParquetWarehouse,
+    source_uri: str,
+    marks: dict[str, dt.datetime | str],
+) -> None:
+    """Composite-key upsert of several high-water marks as ONE
+    checkpoint version (parity: etl.py:102-126 — same ON CONFLICT
+    idiom as the data tables). No marks, no write.
+
+    Accepts ISO-8601 strings for callers whose cursor column was never
+    typed (raw string sources); stored as naive UTC, the same
+    convention ``get_marks`` documents.
     """
-    if not warehouse.table_exists(TABLE):
-        return None
-    row = (
-        warehouse.read(TABLE)
-        .filter(
-            (F.col("source_uri") == source_uri)
-            & (F.col("collection_name") == collection)
+    update = {
+        (source_uri, coll): (
+            dt.datetime.fromisoformat(ts.replace("Z", "+00:00"))
+            if isinstance(ts, str)
+            else ts
         )
-        .select("last_synced_at")
-        .first()
+        for coll, ts in marks.items()
+    }
+    if not update:
+        return
+    # CAS + retry: concurrent syncs of DIFFERENT collections each
+    # read-modify-write this one tiny table; an unchecked write would
+    # drop the other sync's freshly-advanced mark.
+    for _ in range(5):
+        base = warehouse.current_version_name(TABLE)
+        rows = {} if base is None else _read_marks(warehouse, base)
+        rows.update(update)
+        table = arrow_table(
+            [
+                {"source_uri": s, "collection_name": c, "last_synced_at": ts}
+                for (s, c), ts in sorted(rows.items())
+            ],
+            SCHEMA,
+        )
+        try:
+            warehouse.write_version(TABLE, table, expect_base=base)
+            return
+        except ConcurrentWriteError:
+            continue  # another writer committed — merge into theirs
+    raise ConcurrentWriteError(
+        f"checkpoint upsert for {source_uri}.{sorted(marks)} kept losing "
+        "the commit race"
     )
-    return row[0] if row else None
 
 
 def set_last_synced(
@@ -59,47 +142,5 @@ def set_last_synced(
     collection: str,
     ts: dt.datetime | str,
 ) -> None:
-    """Composite-key upsert of the high-water mark (parity:
-    etl.py:102-126 — same ON CONFLICT idiom as the data tables).
-
-    Accepts an ISO-8601 string for callers whose cursor column was
-    never typed (raw string sources); normalized to naive UTC, the
-    same convention ``get_last_synced`` documents.
-    """
-    if isinstance(ts, str):
-        ts = dt.datetime.fromisoformat(ts.replace("Z", "+00:00"))
-    if ts.tzinfo is not None:
-        ts = ts.astimezone(dt.timezone.utc).replace(tzinfo=None)
-    from qms_datawarehouse_spark.warehouse import ConcurrentWriteError
-
-    update = warehouse.spark.createDataFrame(
-        [(source_uri, collection, ts)], schema=SCHEMA
-    )
-    # CAS + retry: concurrent syncs of DIFFERENT collections each
-    # read-modify-write this one tiny table; an unchecked write would
-    # drop the other sync's freshly-advanced mark.
-    for _ in range(5):
-        base = warehouse.current_version_name(TABLE)
-        if base is None:
-            try:
-                warehouse.write_version(TABLE, update, expect_base=None)
-                return
-            except ConcurrentWriteError:
-                continue  # raced the create — merge into theirs
-        target = warehouse.read(TABLE)
-        survivors = target.join(
-            update.select("source_uri", "collection_name"),
-            on=["source_uri", "collection_name"],
-            how="left_anti",
-        )
-        try:
-            warehouse.write_version(
-                TABLE, survivors.unionByName(update), expect_base=base
-            )
-            return
-        except ConcurrentWriteError:
-            continue
-    raise ConcurrentWriteError(
-        f"checkpoint upsert for {source_uri}.{collection} kept losing "
-        "the commit race"
-    )
+    """Upsert one collection's high-water mark (see ``set_marks``)."""
+    set_marks(warehouse, source_uri, {collection: ts})

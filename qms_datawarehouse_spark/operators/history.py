@@ -2,8 +2,11 @@
 
 Parity: /root/reference/src/core/db.py:56-67 (schema) and
 /root/reference/src/services/etl.py:153-179 (start/success/failed
-rows). Appends go to a dedicated append-dir (parquet append mode is
-safe: new files only); the recent-runs view is the reference's
+rows). The driver writes each batch of rows as ONE parquet file with
+pyarrow (no Spark job) under a dot-prefixed temporary name, then
+renames it into the log dir with ``os.replace``. Spark's file listing
+skips dot- and underscore-prefixed names, so a reader sees a batch
+whole or not at all. The recent-runs view is the reference's
 ``ORDER BY started_at DESC LIMIT n`` (S9,
 /root/reference/src/api/routes.py:114-126).
 """
@@ -14,11 +17,12 @@ import datetime as dt
 import os
 import uuid
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from qms_datawarehouse_spark.warehouse import ParquetWarehouse
+from qms_datawarehouse_spark.warehouse import ParquetWarehouse, arrow_table
 
 TABLE = "sync_history"
 
@@ -40,6 +44,45 @@ def _append_dir(warehouse: ParquetWarehouse) -> str:
     return os.path.join(warehouse.root, TABLE + "_log")
 
 
+def entry(
+    source: str,
+    collection: str,
+    status: str,
+    started_at: dt.datetime,
+    completed_at: dt.datetime | None = None,
+    records_synced: int = 0,
+    message: str | None = None,
+) -> dict:
+    """One audit row with a fresh UUID4 id (F9 parity: uuid4 history
+    ids, etl.py:189)."""
+    return {
+        "id": str(uuid.uuid4()),
+        "source": source,
+        "collection": collection,
+        "status": status,
+        "started_at": started_at,
+        "completed_at": completed_at,
+        "records_synced": records_synced,
+        "message": message,
+    }
+
+
+def append(warehouse: ParquetWarehouse, entries: list[dict]) -> None:
+    """Append ``entries`` (see ``entry``) as one file, visible all at
+    once."""
+    log = _append_dir(warehouse)
+    os.makedirs(log, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(log, f".{name}.tmp")
+    try:
+        pq.write_table(arrow_table(entries, SCHEMA), tmp)
+        os.replace(tmp, os.path.join(log, name))
+    except BaseException:
+        if os.path.exists(tmp):
+            os.unlink(tmp)
+        raise
+
+
 def record(
     warehouse: ParquetWarehouse,
     source: str,
@@ -50,26 +93,13 @@ def record(
     records_synced: int = 0,
     message: str | None = None,
 ) -> str:
-    """Append one audit row; returns its UUID id (F9 parity:
-    uuid4 history ids, etl.py:189)."""
-    hist_id = str(uuid.uuid4())
-    row = warehouse.spark.createDataFrame(
-        [
-            (
-                hist_id,
-                source,
-                collection,
-                status,
-                started_at,
-                completed_at,
-                records_synced,
-                message,
-            )
-        ],
-        schema=SCHEMA,
+    """Append one audit row; returns its id."""
+    row = entry(
+        source, collection, status, started_at, completed_at,
+        records_synced, message,
     )
-    row.write.mode("append").parquet(_append_dir(warehouse))
-    return hist_id
+    append(warehouse, [row])
+    return row["id"]
 
 
 def read_history(warehouse: ParquetWarehouse) -> DataFrame:

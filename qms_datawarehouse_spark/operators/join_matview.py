@@ -522,16 +522,21 @@ def join_matview_incremental_replay(spark, sf_dir: str) -> DataFrame:
     # leaves idle (guide §2.6 — actions are only sequential because
     # driver code calls them sequentially). Same for the two epoch-2
     # batches below. Commit safety is unchanged: each merge CASes its
-    # own table.
+    # own table. Each task inherits the caller's Spark local properties
+    # (job group, description).
     from concurrent.futures import ThreadPoolExecutor
+
+    from qms_datawarehouse_spark.session import inherit_local_properties
 
     batch1 = base.filter(F.col("m3") != 0).drop("m3", "m5")
     with ThreadPoolExecutor(max_workers=2) as pool:
         f_fact = pool.submit(
-            merge_upsert, wh, "fact_orders", batch1, n_buckets=16
+            inherit_local_properties(spark, merge_upsert),
+            wh, "fact_orders", batch1, n_buckets=16,
         )
         f_dim = pool.submit(
-            merge_upsert, wh, "dim_customer", dim, n_buckets=16
+            inherit_local_properties(spark, merge_upsert),
+            wh, "dim_customer", dim, n_buckets=16,
         )
         f_fact.result()
         f_dim.result()
@@ -565,10 +570,13 @@ def join_matview_incremental_replay(spark, sf_dir: str) -> DataFrame:
     # customer is gone. The two epoch-2 batches overlap (§2.6 again).
     with ThreadPoolExecutor(max_workers=2) as pool:
         f_fact = pool.submit(
-            merge_upsert, wh, "fact_orders",
+            inherit_local_properties(spark, merge_upsert), wh, "fact_orders",
             inserts.unionByName(updates), n_buckets=16,
         )
-        f_dim = pool.submit(merge_upsert, wh, "dim_customer", moved)
+        f_dim = pool.submit(
+            inherit_local_properties(spark, merge_upsert),
+            wh, "dim_customer", moved,
+        )
         n_moved = f_dim.result()
         f_fact.result()
 

@@ -154,7 +154,7 @@ def merge_upsert_stats(
         try:
             return _merge_upsert_once(
                 warehouse, table, updates, key, order_col, n_buckets
-            )
+            )[:2]
         except ConcurrentWriteError as exc:
             last_exc = exc
     raise last_exc
@@ -167,8 +167,12 @@ def _merge_upsert_once(
     key: str,
     order_col: str | None,
     n_buckets: int | None,
-    txn=None,
-) -> tuple[int, object]:
+    stage: bool = False,
+) -> tuple[int, object, tuple[str, str] | None]:
+    """One merge attempt: ``(rows, hwm, staged)``. With ``stage=True``
+    the new version is written but not committed, and ``staged`` is its
+    ``(version, base)`` for the caller's transaction; otherwise (and
+    for an empty batch) ``staged`` is None."""
     buckets = _resolve_buckets(warehouse, table, n_buckets)
     batch = dedup_last_write_wins(updates, key, order_col)
     # Persist BEFORE any action: the dedup window + bucket hash compute
@@ -194,7 +198,7 @@ def _merge_upsert_once(
             aggs.append(F.max(order_col).alias("hwm"))
         stats = batch.groupBy(BUCKET_COL).agg(*aggs).collect()
         if not stats:  # empty batch short-circuit (P6)
-            return 0, None
+            return 0, None, None
         n = sum(int(r["n"]) for r in stats)
         hwm = (
             max((r["hwm"] for r in stats if r["hwm"] is not None), default=None)
@@ -210,7 +214,7 @@ def _merge_upsert_once(
         # read-current/commit-against-newer TOCTOU).
         base = warehouse.current_version_name(table)
         if base is None:
-            if txn is not None:
+            if stage:
                 # create-on-first-write inside a multi-table txn would
                 # leave meta for a table that may never commit; create
                 # tables first, then merge atomically
@@ -229,7 +233,7 @@ def _merge_upsert_once(
                 table,
                 {"n_buckets": buckets, "key": key, "order_col": order_col},
             )
-            return n, hwm
+            return n, hwm, None
 
         target = warehouse.read(table, version=base)
 
@@ -264,17 +268,16 @@ def _merge_upsert_once(
         # dirs are hardlink-inherited from the PINNED base version —
         # the step that makes incremental cost O(touched), not
         # O(table) — and the commit CASes against that same base.
-        if txn is not None:
+        if stage:
             # stage only — the caller's transaction owns the joint
             # CAS commit across every table in the batch
-            txn.stage_write_partial(
+            return n, hwm, warehouse._stage_version_partial(
                 table, resolved, touched, base_version=base
             )
-        else:
-            warehouse.write_version_partial(
-                table, resolved, touched, base_version=base
-            )
-        return n, hwm
+        warehouse.write_version_partial(
+            table, resolved, touched, base_version=base
+        )
+        return n, hwm, None
     finally:
         batch.unpersist()
 
@@ -312,36 +315,67 @@ def merge_upsert_atomic(
     cross-collection analog of the reference's per-collection upsert
     loop (etl.py), minus its torn window.
 
+    Each table's merge is staged on its own pool thread (at most
+    ``defaultParallelism`` of them): the tables are independent until
+    the commit, so one table's Spark jobs fill the executor slots the
+    others' tails leave idle. Pool threads inherit the caller's Spark
+    local properties (job group, description), and the staged versions
+    are enlisted in the transaction on the caller thread.
+
     Conflict behaviour: if ANY table's base advances mid-transaction,
     the whole batch aborts (nothing visible) and is recomputed against
     the winners — the same retry-by-recompute as merge_upsert_stats,
     but all-or-nothing per attempt. Tables must exist (create them
     with write_version first); returns {table: (rows, hwm)}.
     """
+    from concurrent.futures import ThreadPoolExecutor
+
     from qms_datawarehouse_spark.operators.transaction import (
         MultiTableTransaction,
     )
+    from qms_datawarehouse_spark.session import inherit_local_properties
     from qms_datawarehouse_spark.warehouse import ConcurrentWriteError
 
+    spark = warehouse.spark
+    workers = max(1, min(len(batches), spark.sparkContext.defaultParallelism))
     last_exc: Exception | None = None
     for _ in range(max_retries + 1):
+        with ThreadPoolExecutor(max_workers=workers) as pool:
+            futures = {
+                table: pool.submit(
+                    inherit_local_properties(spark, _merge_upsert_once),
+                    warehouse, table, updates, key, order_col, n_buckets,
+                    stage=True,
+                )
+                for table, updates in sorted(batches.items())
+            }
         txn = MultiTableTransaction(warehouse)
         stats: dict[str, tuple[int, object]] = {}
-        try:
-            for table, updates in sorted(batches.items()):
-                stats[table] = _merge_upsert_once(
-                    warehouse, table, updates, key, order_col, n_buckets,
-                    txn=txn,
-                )
-            if txn.staged:
-                txn.commit()
-            else:  # every batch empty — nothing to flip
-                txn.abort()
+        errors: list[Exception] = []
+        for table, future in futures.items():
+            try:
+                n, hwm, staged = future.result()
+            except Exception as exc:  # noqa: BLE001 — re-raised below
+                errors.append(exc)
+                continue
+            stats[table] = (n, hwm)
+            if staged is not None:
+                txn.enlist(table, *staged)
+        if errors:
+            # a staging failure: drop what the other tables staged.
+            # abort() stays out of the commit path below — after the
+            # journal is written, recovery needs the staged dirs.
+            txn.abort()
+            if not isinstance(errors[0], ConcurrentWriteError):
+                raise errors[0]
+            last_exc = errors[0]
+            continue
+        if not txn.staged:  # every batch empty — nothing to flip
             return stats
+        try:
+            txn.commit()
         except ConcurrentWriteError as exc:
-            txn.abort()
-            last_exc = exc
-        except Exception:
-            txn.abort()
-            raise
+            last_exc = exc  # commit() already removed the staged dirs
+            continue
+        return stats
     raise last_exc

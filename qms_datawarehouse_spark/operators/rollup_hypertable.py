@@ -164,6 +164,7 @@ def update_rollups(
     from qms_datawarehouse_spark.operators.transaction import (
         MultiTableTransaction,
     )
+    from qms_datawarehouse_spark.session import inherit_local_properties
 
     delta_1h = aggregate_to_bucket(delta_events, "1 hour").persist()
     try:
@@ -237,17 +238,22 @@ def update_rollups(
         # hourly job's write tail leaves idle. Atomicity is untouched:
         # staging only writes invisible version dirs; the single
         # commit() below still flips every pointer together.
+        # Each task gets its own copy of the caller's Spark local
+        # properties, so the staging jobs keep the caller's job group.
         try:
             with ThreadPoolExecutor(max_workers=2) as pool:
-                list(
-                    pool.map(
-                        _stage,
-                        (
-                            (hourly_table, delta_1h),
-                            (daily_table, coarsen(delta_1h, "1 day")),
-                        ),
+                futures = [
+                    pool.submit(
+                        inherit_local_properties(warehouse.spark, _stage),
+                        item,
                     )
-                )
+                    for item in (
+                        (hourly_table, delta_1h),
+                        (daily_table, coarsen(delta_1h, "1 day")),
+                    )
+                ]
+            for f in futures:
+                f.result()
         except BaseException:
             txn.abort()
             raise

@@ -108,10 +108,7 @@ class MultiTableTransaction:
         caller's read and this call would otherwise be silently
         overwritten: the read-compute/stage TOCTOU the partial path
         closes with ``base_version``)."""
-        if self._done:
-            raise RuntimeError("transaction already finished")
-        if table in self.staged:
-            raise ValueError(f"table {table!r} already staged in {self.txn_id}")
+        self._check_stageable(table)
         base = (
             self.wh.current_version_name(table)
             if expect_base is MultiTableTransaction._BASE_AT_STAGE
@@ -144,15 +141,26 @@ class MultiTableTransaction:
         This is what makes cross-table transactional MERGE viable at
         100 TB: a multi-table batch touches a few dozen buckets per
         table; everything else is filesystem-metadata time."""
+        self._check_stageable(table)
+        version, base = self.wh._stage_version_partial(
+            table, df, touched, partition_col, base_version
+        )
+        self.enlist(table, version, base)
+        return version
+
+    def enlist(self, table: str, version: str, base: str | None) -> None:
+        """Adopt a version already staged by
+        ``warehouse._stage_version_partial`` (for instance on a worker
+        thread): ``commit`` CASes it against ``base``, ``abort`` removes
+        it."""
+        self._check_stageable(table)
+        self.staged[table] = {"version": version, "base": base}
+
+    def _check_stageable(self, table: str) -> None:
         if self._done:
             raise RuntimeError("transaction already finished")
         if table in self.staged:
             raise ValueError(f"table {table!r} already staged in {self.txn_id}")
-        version, base = self.wh._stage_version_partial(
-            table, df, touched, partition_col, base_version
-        )
-        self.staged[table] = {"version": version, "base": base}
-        return version
 
     # -- journal -------------------------------------------------------
 

@@ -11,8 +11,10 @@ optimizer adapt".
 from __future__ import annotations
 
 import os
+from typing import Callable
 
 from pyspark.sql import SparkSession
+from pyspark.util import inheritable_thread_target
 
 _TUNING = {
     # Runtime re-planning: partition coalescing, skew-join splitting.
@@ -63,3 +65,25 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def inherit_local_properties(spark: SparkSession, fn: Callable) -> Callable:
+    """``fn`` as a target for a pool thread that takes a copy of the
+    CALLING thread's Spark local properties (job group, description,
+    tags), captured now. Without it, jobs launched from pool threads
+    lose the caller's job group.
+
+    The copy is applied by pyspark's ``inheritable_thread_target`` in a
+    call that returns before ``fn`` starts. Wrapping ``fn`` itself would
+    leave a pyspark frame at the bottom of the thread's stack, where
+    pyspark's call-site walker stops: every job would then be stamped
+    with the executor's frame instead of the package line that
+    launched it. Wrap once per submitted task, so tasks do not share
+    one properties object."""
+    adopt = inheritable_thread_target(spark)(lambda: None)
+
+    def run(*args, **kwargs):
+        adopt()
+        return fn(*args, **kwargs)
+
+    return run

@@ -35,6 +35,7 @@ which file's footer Spark happens to sniff first.
 
 from __future__ import annotations
 
+import datetime as dt
 import json
 import os
 import re
@@ -42,9 +43,12 @@ import shutil
 import time
 import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.functions import col as F_col
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 
 CURRENT_POINTER = "_CURRENT"
 BUCKET_COL = "_bucket"
@@ -92,6 +96,25 @@ def _parse_partition_value(raw: str, dtype: T.DataType):
     if isinstance(dtype, T.DateType):
         return _dt.date.fromisoformat(raw)
     return raw
+
+
+def arrow_table(rows: list[dict], schema: T.StructType) -> pa.Table:
+    """Driver-side rows as an Arrow table that Spark reads back as
+    ``schema`` (timestamps become UTC-adjusted micros, which Spark maps
+    to ``TimestampType``). Aware datetimes are converted to naive UTC
+    first: given an explicit timestamp type, pyarrow stores an aware
+    value's wall clock and drops its offset."""
+    ts_cols = [
+        f.name for f in schema.fields if isinstance(f.dataType, T.TimestampType)
+    ]
+
+    def utc(v):
+        if v is None or v.tzinfo is None:
+            return v
+        return v.astimezone(dt.timezone.utc).replace(tzinfo=None)
+
+    rows = [{**r, **{c: utc(r.get(c)) for c in ts_cols}} for r in rows]
+    return pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
 
 
 def _merge_schemas(base: T.StructType, extra: T.StructType) -> T.StructType:
@@ -392,7 +415,7 @@ class ParquetWarehouse:
     def write_version(
         self,
         table: str,
-        df: DataFrame,
+        df: DataFrame | pa.Table,
         partition_by: list[str] | None = None,
         keep_versions: int = 2,
         expect_base=_UNCHECKED,
@@ -426,22 +449,33 @@ class ParquetWarehouse:
         that must be atomic with the data (e.g. a materialized view's
         base version) rides the same single pointer swap instead of a
         separate meta write with a crash window between the two.
+
+        ``df`` may be a ``pyarrow.Table`` (see ``arrow_table``): tables
+        of a few rows that the driver owns (sync checkpoints) are
+        written as one parquet file with no Spark job; ``partition_by``
+        and ``cluster`` apply to DataFrames only.
         """
         version, vdir = self._new_version_dir(table)
-        if partition_by and cluster:
-            # cluster rows by the partition key before the partitioned
-            # write: without this, EVERY upstream task writes its own
-            # file into every partition dir it holds rows for (32
-            # tasks x N dirs of small files per commit — the classic
-            # small-files problem, and most of the commit latency on
-            # the write-heavy replay rows). One exchange of the
-            # written rows buys ~one file per partition dir.
-            df = df.repartition(*partition_by)
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(vdir)
-        self._write_schema_file(vdir, df.schema)
+        if isinstance(df, pa.Table):
+            os.makedirs(vdir)
+            pq.write_table(df, os.path.join(vdir, "part-00000.parquet"))
+            schema = from_arrow_schema(df.schema)
+        else:
+            if partition_by and cluster:
+                # cluster rows by the partition key before the partitioned
+                # write: without this, EVERY upstream task writes its own
+                # file into every partition dir it holds rows for (32
+                # tasks x N dirs of small files per commit — the classic
+                # small-files problem, and most of the commit latency on
+                # the write-heavy replay rows). One exchange of the
+                # written rows buys ~one file per partition dir.
+                df = df.repartition(*partition_by)
+            writer = df.write.mode("overwrite")
+            if partition_by:
+                writer = writer.partitionBy(*partition_by)
+            writer.parquet(vdir)
+            schema = df.schema
+        self._write_schema_file(vdir, schema)
         if extra_meta is not None:
             self._write_version_meta(vdir, extra_meta)
         self._swap_pointer(table, version, keep_versions, expect_base)

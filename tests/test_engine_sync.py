@@ -10,7 +10,10 @@ by local parquet.
 from __future__ import annotations
 
 import datetime as dt
+import os
+from collections import Counter
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import types as T
 
@@ -276,3 +279,111 @@ def test_register_views_enables_plain_sql(spark, warehouse):
         "JOIN sync_metadata m ON m.collection_name = 'employees'"
     )
     assert joined.count() == 3
+
+
+def test_bookkeeping_runs_no_spark_job_and_round_trips(
+    spark, warehouse, jobs_in_group
+):
+    """History rows and checkpoint marks are written and read on the
+    driver; Spark readers still see the declared timestamp columns,
+    microsecond-exact, with NULL kept NULL."""
+    started = dt.datetime(2024, 3, 4, 5, 6, 7, 891011)
+    done = dt.datetime(2024, 3, 4, 5, 7, 0, 1)
+    mark = dt.datetime(2024, 5, 6, 7, 8, 9, 123457)
+    with jobs_in_group("bookkeeping") as jobs:
+        history.record(warehouse, "s", "c", "STARTED", started)
+        history.record(
+            warehouse, "s", "c", "SUCCESS", started,
+            completed_at=done, records_synced=7, message="ok",
+        )
+        checkpoint.set_last_synced(warehouse, "s", "c", mark)
+        checkpoint.set_last_synced(
+            warehouse, "s", "d", "2024-05-06T09:08:09.5+02:00"
+        )
+        assert checkpoint.get_last_synced(warehouse, "s", "c") == mark
+        assert checkpoint.get_last_synced(warehouse, "s", "missing") is None
+    assert jobs == []
+
+    hist = history.read_history(warehouse)
+    assert dict(hist.dtypes)["started_at"] == "timestamp"
+    rows = {r.status: r for r in hist.collect()}
+    assert rows["STARTED"].started_at == started
+    assert rows["STARTED"].completed_at is None
+    assert rows["SUCCESS"].completed_at == done
+    assert (rows["SUCCESS"].records_synced, rows["SUCCESS"].message) == (7, "ok")
+
+    ckpt = warehouse.read(checkpoint.TABLE)
+    assert dict(ckpt.dtypes)["last_synced_at"] == "timestamp"
+    assert {r.collection_name: r.last_synced_at for r in ckpt.collect()} == {
+        "c": mark,
+        "d": dt.datetime(2024, 5, 6, 7, 8, 9, 500000),
+    }
+
+
+def test_sync_collections_atomic_writes_one_bookkeeping_file_per_phase(
+    spark, warehouse
+):
+    """Three collections: one STARTED file, one SUCCESS file, two rows
+    per collection, and every advanced mark in one checkpoint version."""
+    from qms_datawarehouse_spark.engine import sync_collections_atomic
+
+    def mk(rows):
+        return spark.createDataFrame(
+            rows, "_id string, v string, updated_at timestamp"
+        )
+
+    t0, t1 = dt.datetime(2024, 1, 1), dt.datetime(2024, 2, 1, 0, 0, 0, 42)
+    frames = {c: mk([(f"{c}-1", "v", t1)]) for c in ("rat", "tix", "usr")}
+    for c in frames:
+        sync_dataframe(warehouse, mk([(f"{c}-0", "seed", t0)]), "seed", c)
+    log = os.path.join(warehouse.root, history.TABLE + "_log")
+    files_before = len(os.listdir(log))
+    versions_before = len(warehouse.list_versions(checkpoint.TABLE))
+
+    sync_collections_atomic(warehouse, frames, "prod")
+
+    assert len(os.listdir(log)) == files_before + 2
+    new = history.read_history(warehouse).filter("source = 'prod'").collect()
+    assert Counter((r.collection, r.status) for r in new) == {
+        (c, s): 1 for c in frames for s in ("STARTED", "SUCCESS")
+    }
+    assert len(warehouse.list_versions(checkpoint.TABLE)) == versions_before + 1
+    assert checkpoint.get_marks(warehouse, "prod") == {c: t1 for c in frames}
+
+
+def test_checkpoint_reads_spark_written_int96_version(spark, warehouse):
+    """A checkpoint version written by Spark (INT96 timestamps, Spark's
+    parquet default) reads back the same marks through the driver-side
+    reader, and a batched advance keeps the other collections' marks."""
+    ts = [dt.datetime(2024, 1, 2, 3, 4, 5, 678901 + i) for i in range(5)]
+    key = "spark.sql.parquet.outputTimestampType"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "INT96")
+    try:
+        warehouse.write_version(
+            checkpoint.TABLE,
+            spark.createDataFrame(
+                [("s", "c1", ts[0]), ("s", "c2", ts[1]), ("o", "c1", ts[2])],
+                checkpoint.SCHEMA,
+            ),
+        )
+    finally:
+        spark.conf.set(key, old)
+    vdir = warehouse.current_version_dir(checkpoint.TABLE)
+    part = next(f for f in os.listdir(vdir) if f.endswith(".parquet"))
+    col = pq.ParquetFile(os.path.join(vdir, part)).schema.column(2)
+    assert col.physical_type == "INT96"
+
+    assert checkpoint.get_marks(warehouse, "s") == {"c1": ts[0], "c2": ts[1]}
+    checkpoint.set_marks(warehouse, "s", {"c2": ts[3], "c3": ts[4]})
+    assert checkpoint.get_marks(warehouse, "s") == {
+        "c1": ts[0], "c2": ts[3], "c3": ts[4],
+    }
+    assert checkpoint.get_marks(warehouse, "o") == {"c1": ts[2]}
+    assert {
+        (r.source_uri, r.collection_name): r.last_synced_at
+        for r in warehouse.read(checkpoint.TABLE).collect()
+    } == {
+        ("s", "c1"): ts[0], ("s", "c2"): ts[3], ("s", "c3"): ts[4],
+        ("o", "c1"): ts[2],
+    }

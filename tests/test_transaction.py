@@ -346,3 +346,82 @@ def test_sync_collections_atomic_lifecycle(spark, warehouse):
     # second run: checkpoints filter everything out
     res2 = sync_collections_atomic(warehouse, frames, "prod")
     assert all(r.records_synced == 0 for r in res2)
+
+
+def _tagged(spark, ids, tag, ts):
+    return spark.createDataFrame(
+        [(str(i), tag, ts) for i in ids],
+        "_id string, tag string, updated_at timestamp",
+    )
+
+
+def test_merge_upsert_atomic_staging_jobs_keep_caller_job_group(
+    spark, warehouse, jobs_in_group
+):
+    """The per-table staging runs on pool threads; its Spark jobs must
+    still carry the caller's job group."""
+    import datetime as dt
+
+    from qms_datawarehouse_spark.operators.merge import merge_upsert, merge_upsert_atomic
+
+    t0, t1 = dt.datetime(2024, 1, 1), dt.datetime(2024, 2, 1)
+    for t in ("a1", "b1"):
+        merge_upsert(warehouse, t, _tagged(spark, range(4), "old", t0))
+    with jobs_in_group("g") as jobs:
+        stats = merge_upsert_atomic(
+            warehouse,
+            {"a1": _tagged(spark, [0], "new", t1), "b1": _tagged(spark, [1], "new", t1)},
+        )
+    assert stats == {"a1": (1, t1), "b1": (1, t1)}
+    # each table stages at least its stats aggregate and its write
+    assert len(jobs) >= 4
+
+
+def test_sync_collections_atomic_staging_failure_aborts_every_table(
+    spark, warehouse
+):
+    """One collection's merge raises while the others stage
+    concurrently: nothing stays staged, no pointer or mark moves, and
+    every collection gets one FAILED history row."""
+    import datetime as dt
+    from collections import Counter
+
+    from qms_datawarehouse_spark.engine import sync_collections_atomic
+    from qms_datawarehouse_spark.operators import checkpoint, history
+
+    t0, t1, t2 = (dt.datetime(2024, m, 1) for m in (1, 2, 3))
+    from qms_datawarehouse_spark.operators.merge import merge_upsert
+
+    seed = {t: _tagged(spark, [0], "seed", t0) for t in ("tix", "usr")}
+    for t, df in seed.items():
+        merge_upsert(warehouse, t, df)
+    sync_collections_atomic(
+        warehouse, {t: _tagged(spark, [1], "v1", t1) for t in seed}, "prod"
+    )
+
+    def version_dirs():
+        return {
+            t: sorted(
+                v for v in os.listdir(warehouse.table_dir(t))
+                if v.startswith("v_")
+            )
+            for t in seed
+        }
+
+    pointers = {t: warehouse.current_version_name(t) for t in seed}
+    dirs = version_dirs()
+    marks = checkpoint.get_marks(warehouse, "prod")
+    assert marks == {"tix": t1, "usr": t1}
+
+    frames = {t: _tagged(spark, [2], "v2", t2) for t in (*seed, "zz_absent")}
+    with pytest.raises(ValueError, match="requires existing table"):
+        sync_collections_atomic(warehouse, frames, "prod")
+
+    assert {t: warehouse.current_version_name(t) for t in seed} == pointers
+    assert version_dirs() == dirs
+    assert not os.path.exists(warehouse.table_dir("zz_absent"))
+    assert checkpoint.get_marks(warehouse, "prod") == marks
+    failed = history.read_history(warehouse).filter("status = 'FAILED'")
+    assert Counter(r.collection for r in failed.collect()) == {
+        t: 1 for t in frames
+    }
