@@ -1565,7 +1565,7 @@ _GATE_REPLAY_SQL = f"""
 def ingest_gate_replay_two_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The incremental/streaming ingest gate's admission math
     (operators/incremental_dedup.ingest_dedup, driven per-epoch by
-    streaming/sync.stream_ingest_dedup) as a stateless, value-checked
+    streaming/sync.stream_ingest) as a stateless, value-checked
     two-epoch replay: documents split by doc_id parity — EVEN ids land
     as epoch 1, ODD as epoch 2.
 

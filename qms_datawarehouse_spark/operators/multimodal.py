@@ -1378,7 +1378,7 @@ def _phash_gate_replay_sql() -> str:
 def phash_gate_replay_two_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The image-phash admission gate's math (operators/phash_gate.
     ingest_image_phash, driven per-epoch by streaming/sync.
-    stream_ingest_image_phash) as a stateless, value-checked two-epoch
+    stream_ingest) as a stateless, value-checked two-epoch
     replay — the mold ``ingest_gate_replay_two_epochs`` (MinHash) and
     ``semantic_gate_replay_two_epochs`` (SemDeDup) set, completing
     driver-verifiable coverage for all three gate-family members.

@@ -1,30 +1,14 @@
-"""Perceptual-hash ingest gate: admit binary payloads that are not
-image near-dups (dHash Hamming <= T) of the stored corpus — the
-multimodal member of the admission-gate family (MinHash gate for
-text: operators/incremental_dedup.py; SemDeDup gate for embeddings:
-operators/semantic_gate.py; this module for image payloads).
+"""Perceptual-hash ingest gates: admit binary payloads that are not
+image near-dups (dHash Hamming <= T) — or, with the audio kernel,
+audio near-dups — of the stored corpus. The multimodal members of the
+admission-gate family; ``incremental_dedup.admit`` runs them.
 
 Storage layout mirrors the MinHash gate: a keyed corpus table holding
-each payload's four 16-bit dHash band integers (the hash IS the
-stored state — payload bytes never persist here), plus a band-value
-index physically partitioned by a bv-derived bucket so the per-batch
-probe prunes to the batch's touched partitions — O(batch) reads at
-any corpus size. Commit is a keyed upsert (re-ingested ids replace
-their row) and the index rebuild drops the replaced ids' stale band
-rows, reusing ``incremental_dedup._index_append`` verbatim — the
-band-index maintenance problem is identical once columns share names.
-
-Crash window (the gate-family commit order): corpus upsert lands
-BEFORE the index rebuild, so a crash between the two leaves accepted
-hash rows invisible to the band probe (first ingest) or visible under
-the REPLACED content's stale band values (re-ingestion) — near-dups
-would be admitted until the index catches up. Because the hash IS
-the stored state, recovery is free: ``reconcile_phash_index`` diffs
-the expected band rows (re-derived from the corpus hash columns — no
-payload re-decode) against the index at (doc_id, band_id, bv)
-granularity and rewrites every disagreeing doc's rows; the streaming
-twin runs it once at startup so a restarted pipeline self-heals
-before its first epoch.
+each payload's four 16-bit band integers (the hash IS the stored
+state — payload bytes never persist here), plus a band-value index
+physically partitioned by a bv-derived bucket so the per-batch probe
+prunes to the batch's touched partitions — O(batch) reads at any
+corpus size.
 
 Reference capability analog: none (reference stores raw blobs in
 Mongo, src/core/db.py:28-32; this is SURVEY §2.12's multimodal
@@ -33,13 +17,19 @@ dedup applied at ingest time).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import replace
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from qms_datawarehouse_spark.operators.incremental_dedup import (
+    BVB_COL,
+    GateKernel,
+    GateResult,
+    _bv_bucket,
+    admit,
+)
 from qms_datawarehouse_spark.warehouse import ParquetWarehouse
-from qms_datawarehouse_spark.operators.merge import merge_upsert
 
 # NOTE: the dHash kernel imports lazily inside functions — a
 # module-level import of operators.multimodal here forms a cycle when
@@ -54,47 +44,38 @@ AUDIO_CORPUS_TABLE = "audio_fp_corpus"
 AUDIO_INDEX_TABLE = "audio_fp_bands"
 
 
-@dataclass
-class PhashIngestResult:
-    n_batch: int
-    n_accepted: int
-    n_rejected: int
-    rejected: list = field(default_factory=list)  # (new_id, old_id, hamming)
-    # report only, capped at ``max_rejects`` pairs; counts stay exact
-    rejects_truncated: bool = False
-    # EXACT distinct rejected ids, sorted — O(batch) driver memory by
-    # construction (ids, never pairs), so consumers filtering the
-    # batch (the curate CLI) need not uncap the quadratic pair report
-    rejected_ids: list = field(default_factory=list)
-
-
-def _hash_batch(batch: DataFrame, kernel=None) -> DataFrame:
-    """(doc_id, b0..b3) via an Arrow-batched banded-hash kernel — the
-    same pluggable-decode seam the query rows use (stub byte-bigram
-    grid / audio energy profile today, a real codec when the library
-    exists). ``kernel`` defaults to the image dHash; the audio gate
-    passes ``audio_fp_bands``. TOTAL over the batch: NULL content
-    coalesces to b"" and both stub kernels are defined for empty
-    payloads (all-zero bands — empty payloads are Hamming-0 dups of
-    each other), so every batch row is hashed, admitted-or-rejected,
-    and counted — the EXACT-counts contract never silently drops a
-    row."""
-    from qms_datawarehouse_spark.operators.multimodal import (
-        PHASH_SCHEMA,
-        dhash_bands,
-    )
-
+def _payloads(batch: DataFrame) -> DataFrame:
+    """NULL content coalesces to b"" and both stub kernels are defined
+    for empty payloads (all-zero bands — empty payloads are Hamming-0
+    dups of each other), so every batch row is hashed,
+    admitted-or-rejected, and counted — the EXACT-counts contract
+    never silently drops a row."""
     return batch.select(
         "doc_id",
-        F.coalesce(F.col("content"), F.lit(b"")).alias("content"),
-    ).mapInPandas(kernel or dhash_bands, schema=PHASH_SCHEMA)
+        F.coalesce(F.col("content").cast("binary"), F.lit(b"")).alias("content"),
+    )
+
+
+def _hash_with(kernel_name: str):
+    """(doc_id, b0..b3) via an Arrow-batched banded-hash kernel of
+    operators.multimodal — the same pluggable-decode seam the query
+    rows use (stub byte-bigram grid / audio energy profile today, a
+    real codec when the library exists)."""
+
+    def features(payloads: DataFrame, _book=None) -> DataFrame:
+        from qms_datawarehouse_spark.operators import multimodal
+
+        return payloads.mapInPandas(
+            getattr(multimodal, kernel_name), schema=multimodal.PHASH_SCHEMA
+        )
+
+    return features
 
 
 def _band_rows(ph: DataFrame) -> DataFrame:
     """(doc_id, band_id, bv): four index rows per payload — the ONE
-    shared band derivation (multimodal.band_rows), renamed to the
-    MinHash gate's index column contract so its partitioned
-    append/rebuild helper applies unchanged."""
+    shared band derivation (multimodal.band_rows), under the index
+    column names every band gate uses."""
     from qms_datawarehouse_spark.operators.multimodal import band_rows
 
     return band_rows(ph, band_col="band_id", value_col="bv")
@@ -102,7 +83,9 @@ def _band_rows(ph: DataFrame) -> DataFrame:
 
 def _verify_hamming(cand: DataFrame, new_ph: DataFrame, old_ph: DataFrame) -> DataFrame:
     """Exact Hamming distance on the four band ints for candidate
-    (new, old) pairs; keeps pairs at <= T."""
+    (new, old) pairs; keeps pairs at <= T. Banding is
+    pigeonhole-lossless at T=3 (<= 3 differing bits leave >= 1 of 4
+    bands exact), so the banded probe misses no true pair."""
     from qms_datawarehouse_spark.operators.multimodal import (
         _PHASH_BANDS,
         _PHASH_T,
@@ -129,6 +112,33 @@ def _verify_hamming(cand: DataFrame, new_ph: DataFrame, old_ph: DataFrame) -> Da
     )
 
 
+IMAGE_GATE = GateKernel(
+    op="ingest_image_phash",
+    id_col="doc_id",
+    payload_col="content",
+    noun="payload",
+    project=_payloads,
+    features=_hash_with("dhash_bands"),
+    keys=_band_rows,
+    key_cols=("band_id", "bv"),
+    part_col=BVB_COL,
+    part=_bv_bucket,
+    verify=_verify_hamming,
+    corpus_table=CORPUS_TABLE,
+    index_table=INDEX_TABLE,
+)
+# chromaprint-style energy-delta bits (the dedup_audio_fingerprint
+# row's fingerprint), packed as the same four 16-bit bands at T=3, so
+# only the kernel and the tables differ
+AUDIO_GATE = replace(
+    IMAGE_GATE,
+    op="ingest_audio_fingerprint",
+    features=_hash_with("audio_fp_bands"),
+    corpus_table=AUDIO_CORPUS_TABLE,
+    index_table=AUDIO_INDEX_TABLE,
+)
+
+
 def ingest_image_phash(
     warehouse: ParquetWarehouse,
     batch: DataFrame,
@@ -136,219 +146,13 @@ def ingest_image_phash(
     index_table: str = INDEX_TABLE,
     n_buckets: int = 64,
     max_rejects: int | None = 10_000,
-    kernel=None,
-    op_name: str = "ingest_image_phash",
-) -> PhashIngestResult:
+) -> GateResult:
     """Admit ``batch`` payloads (``doc_id``, ``content``) whose dHash
     is not within Hamming T of the stored corpus or of a lower-id
     batch-mate; upsert the admitted hashes and their index rows.
-
-    Rejection rule (deterministic, the gate-family policy): a batch
-    payload is rejected iff a STORED payload shares >= 1 band at
-    Hamming <= T, or a LOWER-id batch payload does. Banding is
-    pigeonhole-lossless at T=3 (<= 3 differing bits leave >= 1 of 4
-    bands exact), so the banded probe misses no true pair.
-
-    ``max_rejects`` bounds the ``rejected`` pair REPORT riding back
-    to the driver; ``n_accepted``/``n_rejected`` stay EXACT
-    (DataFrame counts, never the capped list). Replay-safe: a
-    re-sent admitted id self-pairs only with its own stored row,
-    which the probe's id-inequality skips, and the commit is a keyed
-    upsert — at-least-once delivery converges.
-
-    Intra-batch id duplicates: byte-identical repeats of one
-    (doc_id, content) row collapse to one row BEFORE hashing (an
-    at-least-once upstream may replay inside one micro-batch), so
-    ``n_batch``/``n_accepted`` count payloads, not deliveries, and
-    the "corpus rows == Σ n_accepted" invariant holds. The same id
-    carrying DIFFERENT content in one batch has no deterministic
-    winner — that fails loudly instead of letting the keyed upsert
-    pick one arbitrarily."""
-    from qms_datawarehouse_spark.operators.incremental_dedup import (
-        BVB_COL,
-        _bounded_pair_report,
-        _bv_bucket,
-        _index_append,
-    )
-
-    batch = batch.select(
-        "doc_id", F.coalesce(F.col("content"), F.lit(b"")).alias("content")
-    ).dropDuplicates()
-    # ONE aggregate serves the conflict gate AND the batch count (the
-    # take(1)-then-count pair cost two jobs — the ingest_semantic
-    # fold); the groupBy that names the offending id only runs on the
-    # rare violation path
-    stats = batch.agg(
-        F.count(F.lit(1)).alias("n"),
-        # count_distinct skips NULL ids; NULL-id rows form ONE group
-        # under the old groupBy gate, so add that group back before
-        # comparing — a single NULL-id row must not trip the gate
-        (
-            F.count_distinct(F.col("doc_id"))
-            + F.when(
-                F.count(F.when(F.col("doc_id").isNull(), 1)) > 0, 1
-            ).otherwise(0)
-        ).alias("nd"),
-    ).first()
-    if stats["nd"] != stats["n"]:
-        conflict = (
-            batch.groupBy("doc_id").count().filter(F.col("count") > 1).take(1)
-        )
-        raise ValueError(
-            f"{op_name}: doc_id "
-            f"{conflict[0][0]!r} appears in this batch with more than one "
-            "distinct payload — no deterministic winner; dedupe upstream"
-        )
-
-    n_batch = stats["n"]
-    if n_batch == 0:
-        return PhashIngestResult(0, 0, 0, [])
-
-    ph = _hash_batch(batch, kernel).persist()
-    bands = _band_rows(ph).persist()
-
-    rejected: list[tuple] = []
-    truncated = False
-    _report = _bounded_pair_report
-
-    # -- in-batch canonicalization: lowest doc_id survives ------------
-    a, b = bands.alias("a"), bands.alias("b")
-    in_batch = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.bv") == F.col("b.bv"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("b.doc_id").alias("new_id"), F.col("a.doc_id").alias("old_id")
-        )
-        .distinct()
-    )
-    in_batch_dups = _verify_hamming(in_batch, ph, ph).persist()
-    got, trunc = _report(in_batch_dups, max_rejects)
-    rejected += got
-    truncated |= trunc
-    batch_dup_ids = {
-        r[0] for r in in_batch_dups.select("new_id").distinct().collect()
-    }
-    dup_ids = in_batch_dups.select(F.col("new_id").alias("doc_id"))
-
-    # -- cross-corpus probe: partition-pruned band index ---------------
-    cross_dups = None
-    if warehouse.table_exists(index_table):
-        touched_bvb = [
-            r[0]
-            for r in bands.select(_bv_bucket().alias("b")).distinct().collect()
-        ]
-        index = warehouse.read(index_table).filter(
-            F.col(BVB_COL).isin(touched_bvb)
-        )
-        cand = (
-            index.join(
-                F.broadcast(bands),
-                (bands["band_id"] == index["band_id"])
-                & (bands["bv"] == index["bv"])
-                & (bands["doc_id"] != index["doc_id"]),
-            )
-            .select(
-                bands["doc_id"].alias("new_id"),
-                index["doc_id"].alias("old_id"),
-            )
-            .distinct()
-        )
-        cand_old_ids = cand.select(F.col("old_id").alias("doc_id")).distinct()
-        old_ph = warehouse.read(corpus_table).join(
-            cand_old_ids, "doc_id", "left_semi"
-        )
-        cross_dups = _verify_hamming(cand, ph, old_ph).persist()
-        room = None if max_rejects is None else max_rejects - len(rejected)
-        cross, trunc = _report(cross_dups, room)
-        rejected += [r for r in cross if r[0] not in batch_dup_ids]
-        truncated |= trunc
-        dup_ids = dup_ids.unionByName(
-            cross_dups.select(F.col("new_id").alias("doc_id"))
-        )
-
-    # one bounded collect serves both the exact count and the exact
-    # id report (ids are <= batch size — never the pair report's
-    # quadratic worst case)
-    rejected_ids = sorted(r[0] for r in dup_ids.distinct().collect())
-    n_rejected = len(rejected_ids)
-    accepted_ph = ph.join(dup_ids.distinct(), "doc_id", "left_anti")
-    n_accepted = n_batch - n_rejected
-
-    # -- commit: hash rows + index entries, both keyed ------------------
-    if n_accepted:
-        stale_bands = None
-        if warehouse.table_exists(corpus_table):
-            # re-ingestion: the replaced row's OLD band values are
-            # read straight off the stored hash (no recompute), which
-            # pins exactly which index partitions hold the stale rows.
-            # The corpus read is bucket-pruned to the accepted ids'
-            # key buckets (the MinHash gate's acc_buckets recipe,
-            # incremental_dedup.py) — O(batch) reads, never a full
-            # corpus scan per batch; no re-ingestion → zero rows and
-            # the rebuild is a no-op.
-            from qms_datawarehouse_spark.warehouse import BUCKET_COL
-
-            meta_buckets = int(
-                warehouse.read_meta(corpus_table).get("n_buckets", n_buckets)
-            )
-            acc_buckets = [
-                r[0]
-                for r in accepted_ph.select(
-                    F.pmod(
-                        F.xxhash64(F.col("doc_id").cast("string")),
-                        F.lit(meta_buckets),
-                    ).alias("b")
-                )
-                .distinct()
-                .collect()
-            ]
-            prior = (
-                warehouse.read(corpus_table)
-                .filter(F.col(BUCKET_COL).isin(acc_buckets))
-                .join(accepted_ph.select("doc_id"), "doc_id", "left_semi")
-            )
-            # the count both pins the frame before the corpus version
-            # swaps AND serves as the existence probe — a separate
-            # prior.take(1) was a second job over the same pruned
-            # buckets (zero-row priors band zero rows, so the empty
-            # case costs what the probe did)
-            stale_bands = (
-                _band_rows(prior).withColumn(BVB_COL, _bv_bucket()).persist()
-            )
-            if not stale_bands.count():
-                stale_bands.unpersist()
-                stale_bands = None
-        merge_upsert(
-            warehouse,
-            corpus_table,
-            accepted_ph.withColumn("_id", F.col("doc_id").cast("string")),
-            key="_id",
-            order_col=None,
-            n_buckets=n_buckets,
-        )
-        new_entries = bands.join(
-            accepted_ph.select("doc_id"), "doc_id", "left_semi"
-        ).withColumn(BVB_COL, _bv_bucket())
-        _index_append(warehouse, index_table, new_entries, stale_bands)
-        if stale_bands is not None:
-            stale_bands.unpersist()
-    if cross_dups is not None:
-        cross_dups.unpersist()
-    in_batch_dups.unpersist()
-    ph.unpersist()
-    bands.unpersist()
-    return PhashIngestResult(
-        n_batch,
-        n_accepted,
-        n_rejected,
-        sorted(rejected),
-        truncated,
-        rejected_ids=rejected_ids,
-    )
+    Contract and commit: ``incremental_dedup.admit``."""
+    kernel = replace(IMAGE_GATE, corpus_table=corpus_table, index_table=index_table)
+    return admit(warehouse, kernel, batch, n_buckets, max_rejects)
 
 
 def ingest_audio_fingerprint(
@@ -358,101 +162,8 @@ def ingest_audio_fingerprint(
     index_table: str = AUDIO_INDEX_TABLE,
     n_buckets: int = 64,
     max_rejects: int | None = 10_000,
-) -> PhashIngestResult:
-    """The AUDIO member of the banded-hash admission gate: identical
-    storage layout, probe, commit, replay and reconcile semantics as
-    the image gate above — only the Arrow-batched kernel differs
-    (``audio_fp_bands``: chromaprint-style energy-delta bits, the
-    ``dedup_audio_fingerprint`` row's fingerprint). Both fingerprints
-    pack as four 16-bit band ints at T=3, so the pigeonhole-lossless
-    banding argument and every downstream mechanism (bv-partitioned
-    index, keyed upsert, tuple-level reconcile) are shared code, not
-    parallel copies."""
-    from qms_datawarehouse_spark.operators.multimodal import audio_fp_bands
-
-    return ingest_image_phash(
-        warehouse,
-        batch,
-        corpus_table=corpus_table,
-        index_table=index_table,
-        n_buckets=n_buckets,
-        max_rejects=max_rejects,
-        kernel=audio_fp_bands,
-        op_name="ingest_audio_fingerprint",
-    )
-
-
-def reconcile_phash_index(
-    warehouse: ParquetWarehouse,
-    corpus_table: str = CORPUS_TABLE,
-    index_table: str = INDEX_TABLE,
-) -> int:
-    """Repair the crash window between the two gate commits: diff the
-    EXPECTED band rows (re-derived from the stored hash columns — the
-    hash is the stored state, so this never re-decodes a payload)
-    against the index at (doc_id, band_id, bv) granularity, and
-    rewrite the index rows of every disagreeing doc through the same
-    partitioned ``_index_append`` the ingest path uses. Tuple-level
-    diffing matters: a crash after a RE-INGESTION's corpus upsert
-    leaves the doc_id present in the index but under the OLD
-    content's band values — an id-presence check would call that
-    healthy while near-dups of the new content sail through (and
-    near-dups of the replaced content keep matching). Covers all
-    three divergences: missing docs (first-ingest crash), stale band
-    values (re-ingestion crash), and orphaned index docs (no corpus
-    row). Returns the number of docs healed (0 when the two agree).
-
-    Cost: one pass over the index plus the corpus-derived expected
-    rows — a STARTUP/recovery scan, deliberately not on the per-batch
-    path (which stays O(batch) via partition pruning). The streaming
-    twin calls this once before its first epoch."""
-    from qms_datawarehouse_spark.operators.incremental_dedup import (
-        BVB_COL,
-        _bv_bucket,
-        _index_append,
-    )
-
-    if not warehouse.table_exists(corpus_table):
-        return 0
-    corpus = warehouse.read(corpus_table)
-    expected = _band_rows(corpus)
-    if not warehouse.table_exists(index_table):
-        affected = expected.select("doc_id").distinct().persist()
-        n_affected = affected.count()
-        if n_affected:
-            _index_append(
-                warehouse,
-                index_table,
-                expected.withColumn(BVB_COL, _bv_bucket()),
-            )
-        affected.unpersist()
-        return n_affected
-    index = warehouse.read(index_table)
-    keys = ["doc_id", "band_id", "bv"]
-    missing = expected.join(index.select(*keys), keys, "left_anti")
-    stale = index.select(*keys).join(expected, keys, "left_anti")
-    affected = (
-        missing.select("doc_id")
-        .unionByName(stale.select("doc_id"))
-        .distinct()
-        .persist()
-    )
-    n_affected = affected.count()
-    if n_affected:
-        new_entries = expected.join(
-            affected, "doc_id", "left_semi"
-        ).withColumn(BVB_COL, _bv_bucket())
-        # the affected docs' CURRENT index rows pin every partition
-        # their stray entries can live in; _index_append drops all
-        # rows of those doc_ids there before the fresh rows land
-        stale_entries = (
-            index.join(affected, "doc_id", "left_semi")
-            .select(*keys)
-            .withColumn(BVB_COL, _bv_bucket())
-            .persist()
-        )
-        stale_entries.count()  # pin before the index version swaps
-        _index_append(warehouse, index_table, new_entries, stale_entries)
-        stale_entries.unpersist()
-    affected.unpersist()
-    return n_affected
+) -> GateResult:
+    """The AUDIO member of the banded-hash gate: ``ingest_image_phash``
+    with the ``audio_fp_bands`` kernel and its own state tables."""
+    kernel = replace(AUDIO_GATE, corpus_table=corpus_table, index_table=index_table)
+    return admit(warehouse, kernel, batch, n_buckets, max_rejects)

@@ -192,13 +192,8 @@ def update_rollups(
             table, delta = item
             delta = delta.withColumn(DAY_COL, F.to_date("bucket"))
             if not warehouse.table_exists(table):
-                # cluster by the partition key (write_version's
-                # convention — stage_write writes as-given)
                 txn.stage_write(
-                    table,
-                    delta.repartition(DAY_COL),
-                    partition_by=[DAY_COL],
-                    expect_base=None,
+                    table, delta, partition_by=[DAY_COL], expect_base=None
                 )
                 return
             base = warehouse.current_version_name(table)
@@ -210,10 +205,7 @@ def update_rollups(
                     DAY_COL, F.to_date("bucket")
                 )
                 txn.stage_write(
-                    table,
-                    merged.repartition(DAY_COL),
-                    partition_by=[DAY_COL],
-                    expect_base=base,
+                    table, merged, partition_by=[DAY_COL], expect_base=base
                 )
                 return
             contested = existing.filter(

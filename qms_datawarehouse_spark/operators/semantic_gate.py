@@ -15,11 +15,14 @@ of ``dedup_minhash_lsh``:
   pruning, the IVF layout), rejects vectors with a stored cell-mate
   or a lower-id in-batch cell-mate at cosine >= 0.40 (the integer
   threshold compare of ``dedup_semantic`` — no float), and commits
-  the admitted rows with an O(touched-cell) partial write.
+  the admitted rows with an O(touched-cell) partial write — the
+  first batch's centroids in the same commit.
 
 Scale shape per batch: quantize + assign are map-side; the probe is a
 cell equi-join against a partition-pruned corpus read; the commit is
-``write_version_partial`` over touched cells. Nothing is O(corpus).
+a partial version over touched cells. Nothing is O(corpus). The
+shared gate core is ``incremental_dedup.admit``; the corpus is
+partitioned by cell, so it is probed directly, with no band index.
 
 The admission math is driver-verified: ``semantic_gate_replay_two_
 epochs`` replays two epochs statelessly with a DuckDB oracle, and
@@ -29,7 +32,7 @@ tests/test_round7_invariants.py pins that replay equal to two REAL
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -44,21 +47,16 @@ from qms_datawarehouse_spark.operators.kmeans_core import (
     _km_quantized,
     km_scaled_k,
 )
+from qms_datawarehouse_spark.operators.incremental_dedup import (
+    GateKernel,
+    GateResult,
+    admit,
+)
 from qms_datawarehouse_spark.plans.registry import query, tables
 
 CORPUS_TABLE = "semantic_corpus"
 CENTROID_TABLE = "semantic_centroids"
 CELL_COL = "cid"
-
-
-@dataclass
-class SemanticIngestResult:
-    n_batch: int
-    n_accepted: int
-    n_rejected: int
-    rejected: list = field(default_factory=list)  # (new_id, old_id)
-    # report only, capped at ``max_rejects`` pairs; counts stay exact
-    rejects_truncated: bool = False
 
 
 def _dup_cond():
@@ -129,186 +127,65 @@ def _cents_list(cents: DataFrame) -> DataFrame:
     )
 
 
+def _verify_cosine(cand: DataFrame, new: DataFrame, old: DataFrame) -> DataFrame:
+    """Exact integer cosine test for candidate (new, old) cell-mates."""
+    a = new.select(
+        F.col("vec_id").alias("new_id"), F.col("w").alias("wa"), F.col("nn").alias("na")
+    )
+    b = old.select(
+        F.col("vec_id").alias("old_id"), F.col("w").alias("wb"), F.col("nn").alias("nb")
+    )
+    return (
+        cand.join(a, "new_id")
+        .join(b, "old_id")
+        .withColumn("dot", _dot_col())
+        .filter(_dup_cond())
+        .select("new_id", "old_id")
+    )
+
+
+SEMANTIC_GATE = GateKernel(
+    op="ingest_semantic",
+    id_col="vec_id",
+    payload_col="embedding",
+    noun="embedding",
+    project=lambda batch: batch.select("vec_id", "embedding"),
+    # the first batch trains the codebook; every batch is assigned to
+    # the stored centroids map-side (K-row broadcast)
+    features=lambda batch, cents: _members(batch, _cents_list(cents)),
+    # a member row is its own key row (one cell per vector)
+    keys=lambda mem: mem,
+    key_cols=(CELL_COL,),
+    part_col=CELL_COL,
+    part=lambda: F.col(CELL_COL),
+    verify=_verify_cosine,
+    corpus_table=CORPUS_TABLE,
+    book_table=CENTROID_TABLE,
+    # K ∝ first-batch size (km_scaled_k): cells stay ~constant size,
+    # so the in-cell pair term is linear in batch size — the
+    # dedup_semantic_scaled knob applied to the gate
+    train=lambda batch, n: train_semantic_centroids(
+        _km_quantized(batch), km_scaled_k(n)
+    ),
+)
+
+
 def ingest_semantic(
     warehouse,
     batch: DataFrame,
     corpus_table: str = CORPUS_TABLE,
     centroid_table: str = CENTROID_TABLE,
     max_rejects: int | None = 10_000,
-) -> SemanticIngestResult:
+) -> GateResult:
     """Admit the vectors of ``batch`` (``vec_id``, ``embedding``) that
-    are not semantic near-dups (cos >= 0.40) of the stored corpus or
-    of a lower-id batch-mate in the same cell; update the corpus.
-
-    ``max_rejects`` bounds the ``rejected`` pair REPORT riding back
-    to the driver (mirroring ``incremental_dedup.ingest_dedup`` — a
-    batch of mutual near-dups otherwise collects O(pairs) tuples):
-    the first ``max_rejects`` pairs in (new_id, old_id) order are
-    returned and ``rejects_truncated`` is set. ``n_rejected`` stays
-    EXACT — it is the uncapped distinct-id count. ``None`` uncaps.
-
-    Rejection rule (deterministic, the dedup_semantic policy): a
-    batch vector is rejected iff a STORED vector shares its cell at
-    cos >= tau, or a LOWER-id batch vector shares its cell at
-    cos >= tau. Stored rows live partitioned by cell, so the probe
-    reads only the batch's touched cells.
-
-    Intra-batch id duplicates follow the gate-family contract
-    (``ingest_dedup``): byte-identical repeats of one (vec_id,
-    embedding) row collapse before anything is scored; the same
-    vec_id with a DIFFERENT embedding in one batch fails loudly —
-    the in-cell probe's ``va < vb`` id order would otherwise make
-    the admission itself nondeterministic."""
-    batch = batch.select("vec_id", "embedding").dropDuplicates()
-    # ONE aggregate serves the conflict gate AND the batch count (the
-    # take(1)-then-count pair cost two jobs); the groupBy that names
-    # the offending id only runs on the rare violation path
-    stats = batch.agg(
-        F.count(F.lit(1)).alias("n"),
-        # count_distinct skips NULL ids; NULL-id rows form ONE group
-        # under the old groupBy gate, so add that group back before
-        # comparing — a single NULL-id row must not trip the gate
-        (
-            F.count_distinct(F.col("vec_id"))
-            + F.when(
-                F.count(F.when(F.col("vec_id").isNull(), 1)) > 0, 1
-            ).otherwise(0)
-        ).alias("nd"),
-    ).first()
-    if stats["nd"] != stats["n"]:
-        conflict = (
-            batch.groupBy("vec_id").count().filter(F.col("count") > 1).take(1)
-        )
-        raise ValueError(
-            "ingest_semantic: vec_id "
-            f"{conflict[0][0]!r} appears in this batch with more than one "
-            "distinct embedding — no deterministic winner; dedupe upstream"
-        )
-    n_batch = stats["n"]
-    if n_batch == 0:
-        return SemanticIngestResult(0, 0, 0, [])
-
-    q = _km_quantized(batch).persist()
-    if not warehouse.table_exists(centroid_table):
-        # K ∝ first-batch size (km_scaled_k): cells stay ~constant
-        # size, so the in-cell pair term is linear in batch size —
-        # the dedup_semantic_scaled knob applied to the gate
-        warehouse.write_version(
-            centroid_table,
-            train_semantic_centroids(q, km_scaled_k(n_batch)),
-        )
-    cents = _cents_list(warehouse.read(centroid_table))
-
-    mem = _members(batch, cents).persist()
-    a = mem.select(
-        "cid",
-        F.col("vec_id").alias("va"),
-        F.col("w").alias("wa"),
-        F.col("nn").alias("na"),
+    are not semantic near-dups (cos >= 0.40) of a stored cell-mate or
+    of a lower-id batch cell-mate; the cell-partitioned corpus is
+    probed only in the batch's touched cells. Contract and commit:
+    ``incremental_dedup.admit``."""
+    kernel = replace(
+        SEMANTIC_GATE, corpus_table=corpus_table, book_table=centroid_table
     )
-    b = mem.select(
-        F.col("cid").alias("cid_b"),
-        F.col("vec_id").alias("vb"),
-        F.col("w").alias("wb"),
-        F.col("nn").alias("nb"),
-    )
-    in_batch = (
-        a.join(
-            b, (F.col("cid") == F.col("cid_b")) & (F.col("va") < F.col("vb"))
-        )
-        .withColumn("dot", _dot_col())
-        .filter(_dup_cond())
-        .select(F.col("vb").alias("new_id"), F.col("va").alias("old_id"))
-        .distinct()
-    )
-    rejected_pairs = in_batch
-    if warehouse.table_exists(corpus_table):
-        touched = [r[0] for r in mem.select("cid").distinct().collect()]
-        stored = warehouse.read(corpus_table).filter(
-            F.col(CELL_COL).isin(touched)
-        )
-        s = stored.select(
-            F.col(CELL_COL).alias("cid_b"),
-            F.col("vec_id").alias("vb"),
-            F.col("w").alias("wb"),
-            F.col("nn").alias("nb"),
-        )
-        # the batch is the small side by contract — broadcast it and
-        # stream the (partition-pruned) stored slice past it
-        cross = (
-            s.join(F.broadcast(a), F.col("cid") == F.col("cid_b"))
-            .filter(F.col("va") != F.col("vb"))
-            .withColumn("dot", _dot_col())
-            .filter(_dup_cond())
-            .select(F.col("va").alias("new_id"), F.col("vb").alias("old_id"))
-            .distinct()
-        )
-        rejected_pairs = in_batch.unionByName(cross)
-
-    # persisted: THREE consumers read the pair frame (the bounded
-    # report collect, the exact reject count, and the admission
-    # anti-join) — unpersisted, the cell self-join + stored-slice
-    # probe executed three times per batch
-    rejected_pairs = rejected_pairs.persist()
-    rej_ids = rejected_pairs.select(
-        F.col("new_id").alias("vec_id")
-    ).distinct()
-    # bounded driver-side pair report (admission math never reads it
-    # — the filter below is an anti-join on the full frame)
-    if max_rejects is None:
-        rejected = sorted(tuple(r) for r in rejected_pairs.collect())
-        rejects_truncated = False
-    else:
-        rows = (
-            rejected_pairs.orderBy("new_id", "old_id")
-            .limit(max_rejects + 1)
-            .collect()
-        )
-        rejected = [tuple(r) for r in rows[:max_rejects]]
-        rejects_truncated = len(rows) > max_rejects
-    n_rejected = rej_ids.count()
-    admitted = mem.join(rej_ids, "vec_id", "left_anti").select(
-        "vec_id", F.col("cid").alias(CELL_COL), "w", "nn"
-    )
-    n_accepted = n_batch - n_rejected
-    if n_accepted:
-        if warehouse.table_exists(corpus_table):
-            touched = [
-                r[0] for r in admitted.select(CELL_COL).distinct().collect()
-            ]
-            # keyed upsert, not a blind union: a replayed epoch's
-            # vectors are already stored (self-pairs are id-skipped
-            # in the probe, so they re-admit) — anti-join the stored
-            # slice on vec_id so the commit is idempotent
-            # (effectively-once under at-least-once replay, the
-            # stream_ingest_semantic contract). The read-modify-write
-            # pins the version it read (base_version): a racing
-            # writer surfaces ConcurrentWriteError, and the stream's
-            # at-least-once replay of the failed batch re-runs the
-            # idempotent commit against the new state.
-            base = warehouse.current_version_name(corpus_table)
-            part = (
-                warehouse.read(corpus_table, version=base)
-                .filter(F.col(CELL_COL).isin(touched))
-                .join(admitted.select("vec_id"), "vec_id", "left_anti")
-                .unionByName(admitted.select(
-                    "vec_id", CELL_COL, "w", "nn"
-                ))
-            )
-            warehouse.write_version_partial(
-                corpus_table, part, touched, partition_col=CELL_COL,
-                base_version=base,
-            )
-        else:
-            warehouse.write_version(
-                corpus_table, admitted, partition_by=[CELL_COL]
-            )
-    q.unpersist()
-    mem.unpersist()
-    rejected_pairs.unpersist()
-    return SemanticIngestResult(
-        n_batch, n_accepted, n_rejected, rejected, rejects_truncated
-    )
+    return admit(warehouse, kernel, batch, max_rejects=max_rejects)
 
 
 # --------------------------------------------------------------------

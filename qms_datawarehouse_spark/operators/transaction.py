@@ -114,12 +114,7 @@ class MultiTableTransaction:
             if expect_base is MultiTableTransaction._BASE_AT_STAGE
             else expect_base
         )
-        version, vdir = self.wh._new_version_dir(table)
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(vdir)
-        self.wh._write_schema_file(vdir, df.schema)
+        version = self.wh._stage_version(table, df, partition_by)
         self.staged[table] = {"version": version, "base": base}
         return version
 

@@ -42,6 +42,21 @@ EVENTS_SCHEMA = T.StructType(
 )
 
 
+def _start(
+    stream_df: DataFrame, process_batch, checkpoint_dir, available_now
+) -> StreamingQuery:
+    """Start ``process_batch`` as the ``foreachBatch`` sink of
+    ``stream_df``: offsets commit only after it returns."""
+    writer = stream_df.writeStream.foreachBatch(process_batch).outputMode(
+        "update"
+    )
+    if checkpoint_dir:
+        writer = writer.option("checkpointLocation", checkpoint_dir)
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 def stream_sync(
     spark: SparkSession,
     source_dir: str,
@@ -71,10 +86,7 @@ def stream_sync(
         cleaned = clean_records(batch_df, source_name=source_name)
         merge_upsert(warehouse, table, cleaned, key=key, order_col=cursor_col)
 
-    writer = stream.writeStream.foreachBatch(process_batch).outputMode("update")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return _start(stream, process_batch, checkpoint_dir, available_now=False)
 
 
 def deduped_stream(
@@ -132,286 +144,68 @@ def windowed_counts_stream(
     )
 
 
-def stream_ingest_dedup(
+def stream_ingest(
     stream_df: DataFrame,
     warehouse: ParquetWarehouse,
-    corpus_table: str | None = None,
-    index_table: str | None = None,
+    kernel,
+    id_col: str,
+    payload_col: str,
     checkpoint_dir: str | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     available_now: bool = False,
     on_result=None,
 ) -> StreamingQuery:
-    """Streaming corpus ingestion through the LSH near-dup admission
-    gate: every micro-batch probes the persistent band index
-    (O(batch) partition-pruned reads, never the corpus), admits only
-    non-near-dups, and commits corpus upsert + index append.
-
-    ``stream_df`` is ANY streaming DataFrame carrying ``id_col`` +
-    ``text_col`` (file source, docstore connector, rate-shaped test
-    feed) — the gate doesn't care where documents come from, but
-    ``id_col`` must be castable to long (the corpus key); an epoch
-    carrying a non-numeric id fails loudly before any write.
+    """Streaming ingestion through an admission gate: every
+    micro-batch of ``stream_df`` (any streaming source carrying
+    ``id_col`` and ``payload_col``) runs ``incremental_dedup.admit``
+    with ``kernel`` — ``incremental_dedup.MINHASH_GATE``,
+    ``phash_gate.IMAGE_GATE`` / ``AUDIO_GATE`` or
+    ``semantic_gate.SEMANTIC_GATE``, other tables via
+    ``dataclasses.replace``. ``id_col`` must be castable to long (the
+    corpus key); an epoch carrying a non-numeric or NULL id fails
+    loudly before any write.
 
     Delivery: at-least-once replay into convergent state. A replayed
-    batch's docs are already corpus rows; the gate's band join skips
-    self-pairs, the keyed merge upserts the identical row, and the
-    index rebuild is deterministic — so replays collapse
+    batch's rows are already stored; the probe skips self-pairs by id
+    inequality and the commit replaces rows by id, so replays collapse
     (effectively-once, T3) exactly like the batch engine's sync.
 
-    ``on_result(epoch_id, IngestResult)`` observes per-epoch
-    admission stats (accepted/rejected/pairs) for monitoring without
-    a second scan of anything.
+    ``on_result(epoch_id, GateResult)`` observes per-epoch admission
+    stats (accepted/rejected/pairs) without a second scan of anything.
     """
-    from qms_datawarehouse_spark.operators import incremental_dedup as inc
+    from pyspark.sql import functions as F
 
-    corpus_table = corpus_table or inc.CORPUS_TABLE
-    index_table = index_table or inc.INDEX_TABLE
+    from qms_datawarehouse_spark.operators.incremental_dedup import admit
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        from pyspark.sql import functions as F
-
-        # the corpus key is a numeric doc_id; a non-numeric source id
-        # ('doc-1') would either throw an opaque executor-side
-        # CAST_INVALID_INPUT (ANSI mode) or cast to NULL and collapse
-        # every such row onto ONE NULL key in the corpus merge
+        # a non-numeric source id ('doc-1') would either throw an
+        # opaque executor-side CAST_INVALID_INPUT (ANSI mode) or cast
+        # to NULL and collapse every such row onto ONE NULL corpus key
         # (non-ANSI) — and a genuinely NULL source id collapses the
-        # same way, so NULL is invalid too. Probe with try_cast and
-        # fail the epoch with a clear error instead (offsets don't
-        # commit, nothing is lost). try_cast of a NULL input yields
-        # NULL, so this one predicate catches both non-numeric AND
-        # genuinely NULL ids.
-        bad = batch_df.filter(F.col(id_col).try_cast("long").isNull())
-        bad_row = bad.select(id_col).take(1)
+        # same way. try_cast of a NULL input yields NULL, so this one
+        # probe catches both; the epoch fails before any write
+        # (offsets don't commit, nothing is lost).
+        bad_row = (
+            batch_df.filter(F.col(id_col).try_cast("long").isNull())
+            .select(id_col)
+            .take(1)
+        )
         if bad_row:
             raise ValueError(
-                f"stream_ingest_dedup requires numeric {id_col!r} values; "
+                f"{kernel.op} requires numeric {id_col!r} values; "
                 f"got {bad_row[0][0]!r} (epoch {epoch_id})"
             )
-        docs = batch_df.select(
-            F.col(id_col).try_cast("long").alias("doc_id"),
-            F.col(text_col).alias("text"),
-        )
-        res = inc.ingest_dedup(
-            warehouse, docs, corpus_table=corpus_table, index_table=index_table
-        )
-        if on_result is not None:
-            on_result(epoch_id, res)
-
-    writer = stream_df.writeStream.foreachBatch(process_batch).outputMode(
-        "update"
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def stream_ingest_semantic(
-    stream_df: DataFrame,
-    warehouse: ParquetWarehouse,
-    corpus_table: str | None = None,
-    centroid_table: str | None = None,
-    checkpoint_dir: str | None = None,
-    id_col: str = "vec_id",
-    embedding_col: str = "embedding",
-    available_now: bool = False,
-    on_result=None,
-) -> StreamingQuery:
-    """Streaming embedding ingestion through the SemDeDup admission
-    gate — ``semantic_gate.ingest_semantic`` lifted to a live pipeline
-    exactly as ``stream_ingest_dedup`` lifts the MinHash gate: every
-    micro-batch is assigned to the persistent centroid cells (first
-    epoch trains them, K ∝ batch via km_scaled_k), probed against the
-    STORED members of its touched cells only (cell-partitioned reads,
-    never the corpus), and the admitted vectors commit via a partial
-    write of the touched cells.
-
-    Delivery: at-least-once replay into convergent state. A replayed
-    batch's vectors are already corpus rows sharing their own cell at
-    cos=1.0 — but the gate's cross-corpus probe skips self-pairs by
-    id inequality, the in-batch stage is id-ordered, and the partial
-    write re-derives the same touched-cell content, so replays
-    collapse (effectively-once, T3 — pinned in
-    tests/test_streaming_semantic.py).
-
-    ``on_result(epoch_id, SemanticIngestResult)`` observes per-epoch
-    admission stats (accepted/rejected + capped pair report)."""
-    from qms_datawarehouse_spark.operators import semantic_gate as sg
-
-    corpus_table = corpus_table or sg.CORPUS_TABLE
-    centroid_table = centroid_table or sg.CENTROID_TABLE
-
-    def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        from pyspark.sql import functions as F
-
-        # same loud-failure contract as stream_ingest_dedup: the
-        # corpus key is a numeric vec_id; non-numeric or NULL ids
-        # fail the epoch before any write (offsets don't commit)
-        bad = batch_df.filter(F.col(id_col).try_cast("long").isNull())
-        bad_row = bad.select(id_col).take(1)
-        if bad_row:
-            raise ValueError(
-                f"stream_ingest_semantic requires numeric {id_col!r} "
-                f"values; got {bad_row[0][0]!r} (epoch {epoch_id})"
-            )
-        vecs = batch_df.select(
-            F.col(id_col).try_cast("long").alias("vec_id"),
-            F.col(embedding_col).alias("embedding"),
-        )
-        res = sg.ingest_semantic(
+        res = admit(
             warehouse,
-            vecs,
-            corpus_table=corpus_table,
-            centroid_table=centroid_table,
+            kernel,
+            batch_df.select(
+                F.col(id_col).try_cast("long").alias(kernel.id_col),
+                F.col(payload_col).alias(kernel.payload_col),
+            ),
         )
         if on_result is not None:
             on_result(epoch_id, res)
 
-    writer = stream_df.writeStream.foreachBatch(process_batch).outputMode(
-        "update"
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def stream_ingest_image_phash(
-    stream_df: DataFrame,
-    warehouse: ParquetWarehouse,
-    corpus_table: str | None = None,
-    index_table: str | None = None,
-    checkpoint_dir: str | None = None,
-    id_col: str = "doc_id",
-    content_col: str = "content",
-    available_now: bool = False,
-    on_result=None,
-) -> StreamingQuery:
-    """Streaming binary-payload ingestion through the perceptual-hash
-    admission gate — ``phash_gate.ingest_image_phash`` lifted to a
-    live pipeline exactly as the MinHash and SemDeDup gates are:
-    every micro-batch dHashes its payloads (Arrow-batched, the
-    pluggable decode seam), probes ONLY the band-index partitions its
-    band values hash into, and the admitted hashes commit via keyed
-    upsert + index rebuild.
-
-    Delivery: at-least-once replay into convergent state — a replayed
-    payload's only Hamming-0 stored neighbor is its own row, which
-    the probe's id-inequality skips, and the keyed upsert re-derives
-    identical state (effectively-once, T3 — pinned in
-    tests/test_phash_gate.py). Startup self-heal: the gate's two
-    commits (corpus upsert, then index rebuild) are not atomic, so a
-    crash between them leaves hash rows the band probe can't see;
-    ``reconcile_phash_index`` runs ONCE here, before the first epoch,
-    and re-derives any missing band rows from the stored hashes.
-
-    ``on_result(epoch_id, PhashIngestResult)`` observes per-epoch
-    admission stats."""
-    from qms_datawarehouse_spark.operators import phash_gate as pg
-
-    corpus_table = corpus_table or pg.CORPUS_TABLE
-    index_table = index_table or pg.INDEX_TABLE
-    pg.reconcile_phash_index(
-        warehouse, corpus_table=corpus_table, index_table=index_table
-    )
-
-    def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        from pyspark.sql import functions as F
-
-        # same loud-failure contract as the other gates: numeric ids
-        # only; the epoch fails before any write (offsets don't commit)
-        bad = batch_df.filter(F.col(id_col).try_cast("long").isNull())
-        bad_row = bad.select(id_col).take(1)
-        if bad_row:
-            raise ValueError(
-                f"stream_ingest_image_phash requires numeric {id_col!r} "
-                f"values; got {bad_row[0][0]!r} (epoch {epoch_id})"
-            )
-        payloads = batch_df.select(
-            F.col(id_col).try_cast("long").alias("doc_id"),
-            F.col(content_col).cast("binary").alias("content"),
-        )
-        res = pg.ingest_image_phash(
-            warehouse,
-            payloads,
-            corpus_table=corpus_table,
-            index_table=index_table,
-        )
-        if on_result is not None:
-            on_result(epoch_id, res)
-
-    writer = stream_df.writeStream.foreachBatch(process_batch).outputMode(
-        "update"
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def stream_ingest_audio_fingerprint(
-    stream_df: DataFrame,
-    warehouse: ParquetWarehouse,
-    corpus_table: str | None = None,
-    index_table: str | None = None,
-    checkpoint_dir: str | None = None,
-    id_col: str = "doc_id",
-    content_col: str = "content",
-    available_now: bool = False,
-    on_result=None,
-) -> StreamingQuery:
-    """Streaming audio-payload ingestion through the fingerprint
-    admission gate — ``phash_gate.ingest_audio_fingerprint`` lifted to
-    a live pipeline exactly as the image twin above: same delivery
-    contract (at-least-once replay into convergent state), same
-    startup self-heal (``reconcile_phash_index`` over the AUDIO state
-    tables — the reconcile is kernel-independent because the hash IS
-    the stored state), different Arrow-batched kernel."""
-    from qms_datawarehouse_spark.operators import phash_gate as pg
-
-    corpus_table = corpus_table or pg.AUDIO_CORPUS_TABLE
-    index_table = index_table or pg.AUDIO_INDEX_TABLE
-    pg.reconcile_phash_index(
-        warehouse, corpus_table=corpus_table, index_table=index_table
-    )
-
-    def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        from pyspark.sql import functions as F
-
-        bad = batch_df.filter(F.col(id_col).try_cast("long").isNull())
-        bad_row = bad.select(id_col).take(1)
-        if bad_row:
-            raise ValueError(
-                f"stream_ingest_audio_fingerprint requires numeric "
-                f"{id_col!r} values; got {bad_row[0][0]!r} "
-                f"(epoch {epoch_id})"
-            )
-        payloads = batch_df.select(
-            F.col(id_col).try_cast("long").alias("doc_id"),
-            F.col(content_col).cast("binary").alias("content"),
-        )
-        res = pg.ingest_audio_fingerprint(
-            warehouse,
-            payloads,
-            corpus_table=corpus_table,
-            index_table=index_table,
-        )
-        if on_result is not None:
-            on_result(epoch_id, res)
-
-    writer = stream_df.writeStream.foreachBatch(process_batch).outputMode(
-        "update"
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream_df, process_batch, checkpoint_dir, available_now)
 
 
 def stream_apply_changes(
@@ -445,14 +239,7 @@ def stream_apply_changes(
         if on_stats is not None:
             on_stats(epoch_id, stats)
 
-    writer = stream_df.writeStream.foreachBatch(process_batch).outputMode(
-        "update"
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream_df, process_batch, checkpoint_dir, available_now)
 
 
 def stream_split_sync(
@@ -520,7 +307,4 @@ def stream_split_sync(
             )
         txn.commit()
 
-    writer = stream.writeStream.foreachBatch(process_batch).outputMode("update")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return _start(stream, process_batch, checkpoint_dir, available_now=False)

@@ -455,6 +455,22 @@ class ParquetWarehouse:
         written as one parquet file with no Spark job; ``partition_by``
         and ``cluster`` apply to DataFrames only.
         """
+        version = self._stage_version(
+            table, df, partition_by, cluster=cluster, extra_meta=extra_meta
+        )
+        self._swap_pointer(table, version, keep_versions, expect_base)
+        return os.path.join(self.table_dir(table), version)
+
+    def _stage_version(
+        self,
+        table: str,
+        df: DataFrame | pa.Table,
+        partition_by: list[str] | None = None,
+        cluster: bool = True,
+        extra_meta: dict | None = None,
+    ) -> str:
+        """``write_version`` without the pointer swap: returns the
+        staged version's name for the caller's own commit."""
         version, vdir = self._new_version_dir(table)
         if isinstance(df, pa.Table):
             os.makedirs(vdir)
@@ -478,8 +494,7 @@ class ParquetWarehouse:
         self._write_schema_file(vdir, schema)
         if extra_meta is not None:
             self._write_version_meta(vdir, extra_meta)
-        self._swap_pointer(table, version, keep_versions, expect_base)
-        return vdir
+        return version
 
     @staticmethod
     def _write_version_meta(vdir: str, meta: dict) -> None:

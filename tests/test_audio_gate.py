@@ -7,7 +7,6 @@ streaming-twin equivalence pass."""
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from qms_datawarehouse_spark.operators.multimodal import (
     fake_audio_energy_profile,
@@ -111,43 +110,9 @@ def test_image_and_audio_gate_state_is_independent(spark, warehouse):
     } == {2}
 
 
-def test_reconcile_works_over_audio_tables(spark, warehouse):
-    """reconcile_phash_index is kernel-independent (the hash IS the
-    stored state): pointed at the audio tables it heals the same
-    crash window."""
-    from qms_datawarehouse_spark.operators.merge import merge_upsert
-    from qms_datawarehouse_spark.operators.multimodal import audio_fp_bands
-    from qms_datawarehouse_spark.operators.phash_gate import (
-        _hash_batch,
-        reconcile_phash_index,
-    )
-
-    ingest_audio_fingerprint(warehouse, _batch(spark, [(1, _A1)]))
-    fp = _hash_batch(_batch(spark, [(3, _A3)]), kernel=audio_fp_bands)
-    merge_upsert(
-        warehouse,
-        AUDIO_CORPUS_TABLE,
-        fp.withColumn("_id", F.col("doc_id").cast("string")),
-        key="_id",
-        order_col=None,
-    )
-    assert (
-        reconcile_phash_index(
-            warehouse,
-            corpus_table=AUDIO_CORPUS_TABLE,
-            index_table=AUDIO_INDEX_TABLE,
-        )
-        == 1
-    )
-    res = ingest_audio_fingerprint(warehouse, _batch(spark, [(4, _A3)]))
-    assert (res.n_accepted, res.n_rejected) == (0, 1)
-    assert res.rejected == [(4, 3, 0)]
-
-
 def test_stream_gate_matches_batch_call(spark, tmp_path):
-    from qms_datawarehouse_spark.streaming.sync import (
-        stream_ingest_audio_fingerprint,
-    )
+    from qms_datawarehouse_spark.operators.phash_gate import AUDIO_GATE
+    from qms_datawarehouse_spark.streaming.sync import stream_ingest
 
     rows = [(1, _A1), (2, _A2), (3, _A1_NEAR), (4, _A4)]
     schema = "doc_id long, content binary"
@@ -163,9 +128,12 @@ def test_stream_gate_matches_batch_call(spark, tmp_path):
         "append"
     ).parquet(str(feed))
     results = []
-    q = stream_ingest_audio_fingerprint(
+    q = stream_ingest(
         spark.readStream.schema(schema).parquet(str(feed)),
         wh_s,
+        AUDIO_GATE,
+        "doc_id",
+        "content",
         checkpoint_dir=str(tmp_path / "ckpt"),
         available_now=True,
         on_result=lambda epoch, res: results.append(res),

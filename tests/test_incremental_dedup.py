@@ -103,12 +103,13 @@ def test_short_doc_without_shingles_is_admitted(spark, warehouse):
 def test_streaming_ingestion_gate(spark, warehouse, tmp_path):
     """Composition: a docstore stream feeds the ingestion gate per
     micro-batch — the live-pipeline form (connector →
-    stream_ingest_dedup → LSH-gated corpus), with per-epoch admission
+    stream_ingest → LSH-gated corpus), with per-epoch admission
     stats observed through the on_result hook."""
     import json
 
     from qms_datawarehouse_spark.sources.pyds import register_docstore
-    from qms_datawarehouse_spark.streaming.sync import stream_ingest_dedup
+    from qms_datawarehouse_spark.operators.incremental_dedup import MINHASH_GATE
+    from qms_datawarehouse_spark.streaming.sync import stream_ingest
 
     register_docstore(spark)
     log = str(tmp_path / "feed.jsonl")
@@ -123,12 +124,13 @@ def test_streaming_ingestion_gate(spark, warehouse, tmp_path):
     results = []
 
     def run():
-        q = stream_ingest_dedup(
+        q = stream_ingest(
             spark.readStream.format("docstore").option("path", log).load(),
             warehouse,
+            MINHASH_GATE,
             checkpoint_dir=ckpt,
             id_col="_id",
-            text_col="payload",
+            payload_col="payload",
             available_now=True,
             on_result=lambda epoch, res: results.append(res),
         )
@@ -219,7 +221,8 @@ def test_streaming_gate_rejects_non_numeric_ids(spark, warehouse, tmp_path):
     import pytest
 
     from qms_datawarehouse_spark.sources.pyds import register_docstore
-    from qms_datawarehouse_spark.streaming.sync import stream_ingest_dedup
+    from qms_datawarehouse_spark.operators.incremental_dedup import MINHASH_GATE
+    from qms_datawarehouse_spark.streaming.sync import stream_ingest
 
     register_docstore(spark)
     log = str(tmp_path / "feed.jsonl")
@@ -229,12 +232,13 @@ def test_streaming_gate_rejects_non_numeric_ids(spark, warehouse, tmp_path):
                 {"_id": doc_id, "payload": text,
                  "updated_at": "2024-01-01T00:00:00Z"}) + "\n")
 
-    q = stream_ingest_dedup(
+    q = stream_ingest(
         spark.readStream.format("docstore").option("path", log).load(),
         warehouse,
+        MINHASH_GATE,
         checkpoint_dir=str(tmp_path / "ckpt"),
         id_col="_id",
-        text_col="payload",
+        payload_col="payload",
         available_now=True,
     )
     with pytest.raises(Exception, match="numeric"):
@@ -255,7 +259,8 @@ def test_streaming_gate_rejects_null_ids(spark, warehouse, tmp_path):
     import pytest
 
     from qms_datawarehouse_spark.sources.pyds import register_docstore
-    from qms_datawarehouse_spark.streaming.sync import stream_ingest_dedup
+    from qms_datawarehouse_spark.operators.incremental_dedup import MINHASH_GATE
+    from qms_datawarehouse_spark.streaming.sync import stream_ingest
 
     register_docstore(spark)
     log = str(tmp_path / "feed.jsonl")
@@ -267,12 +272,13 @@ def test_streaming_gate_rejects_null_ids(spark, warehouse, tmp_path):
             {"_id": None, "payload": OTHER,
              "updated_at": "2024-01-01T00:00:00Z"}) + "\n")
 
-    q = stream_ingest_dedup(
+    q = stream_ingest(
         spark.readStream.format("docstore").option("path", log).load(),
         warehouse,
+        MINHASH_GATE,
         checkpoint_dir=str(tmp_path / "ckpt"),
         id_col="_id",
-        text_col="payload",
+        payload_col="payload",
         available_now=True,
     )
     with pytest.raises(Exception, match="numeric"):

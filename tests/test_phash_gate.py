@@ -161,15 +161,14 @@ def test_gate_on_fixture_corpus_rejects_near_dups(spark, warehouse):
 
 
 def test_stream_gate_matches_sequential_batch_calls(spark, tmp_path):
-    """availableNow micro-batches through stream_ingest_image_phash
+    """availableNow micro-batches through stream_ingest (image kernel)
     must land the same corpus and per-epoch stats as sequential batch
     ingest_image_phash calls on the same split."""
     from qms_datawarehouse_spark.operators.multimodal import (
         with_binary_content,
     )
-    from qms_datawarehouse_spark.streaming.sync import (
-        stream_ingest_image_phash,
-    )
+    from qms_datawarehouse_spark.operators.phash_gate import IMAGE_GATE
+    from qms_datawarehouse_spark.streaming.sync import stream_ingest
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     payloads = with_binary_content(docs).select("doc_id", "content")
@@ -186,9 +185,12 @@ def test_stream_gate_matches_sequential_batch_calls(spark, tmp_path):
     results = []
 
     def run():
-        q = stream_ingest_image_phash(
+        q = stream_ingest(
             spark.readStream.schema(p1.schema).parquet(str(feed)),
             wh_s,
+            IMAGE_GATE,
+            "doc_id",
+            "content",
             checkpoint_dir=ckpt,
             available_now=True,
             on_result=lambda epoch, res: results.append(res),
@@ -218,9 +220,8 @@ def test_stream_gate_matches_sequential_batch_calls(spark, tmp_path):
 
 
 def test_stream_gate_rejects_non_numeric_ids(spark, tmp_path):
-    from qms_datawarehouse_spark.streaming.sync import (
-        stream_ingest_image_phash,
-    )
+    from qms_datawarehouse_spark.operators.phash_gate import IMAGE_GATE
+    from qms_datawarehouse_spark.streaming.sync import stream_ingest
 
     feed = tmp_path / "feed"
     wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
@@ -228,11 +229,14 @@ def test_stream_gate_rejects_non_numeric_ids(spark, tmp_path):
         [("not-a-number", b"payload bytes here")],
         "doc_id string, content binary",
     ).coalesce(1).write.mode("append").parquet(str(feed))
-    q = stream_ingest_image_phash(
+    q = stream_ingest(
         spark.readStream.schema("doc_id string, content binary").parquet(
             str(feed)
         ),
         wh,
+        IMAGE_GATE,
+        "doc_id",
+        "content",
         checkpoint_dir=str(tmp_path / "ckpt"),
         available_now=True,
     )
@@ -272,76 +276,6 @@ def test_intra_batch_conflicting_content_fails_loudly(spark, warehouse):
     assert not warehouse.table_exists(CORPUS_TABLE)
 
 
-# --------------------------------------------------------------------
-# Crash-window reconciliation: corpus committed, index rebuild lost
-# --------------------------------------------------------------------
-
-
-def test_reconcile_heals_crash_window(spark, warehouse):
-    """Simulate a crash between the gate's two commits (corpus upsert
-    landed, index rebuild didn't): the band probe is blind to the
-    stranded row until ``reconcile_phash_index`` re-derives its band
-    rows from the stored hash — no payload re-decode."""
-    from qms_datawarehouse_spark.operators.merge import merge_upsert
-    from qms_datawarehouse_spark.operators.phash_gate import (
-        _hash_batch,
-        reconcile_phash_index,
-    )
-
-    ingest_image_phash(warehouse, _batch(spark, [(1, _T1)]))
-    # the crash: doc 3's hash row reaches the corpus, never the index
-    ph3 = _hash_batch(_batch(spark, [(3, _T3)]))
-    merge_upsert(
-        warehouse,
-        CORPUS_TABLE,
-        ph3.withColumn("_id", F.col("doc_id").cast("string")),
-        key="_id",
-        order_col=None,
-    )
-    assert warehouse.read(INDEX_TABLE).filter("doc_id = 3").count() == 0
-
-    assert reconcile_phash_index(warehouse) == 1
-    assert warehouse.read(INDEX_TABLE).filter("doc_id = 3").count() == 4
-    # the healed index sees doc 3 again: its dup is rejected
-    res = ingest_image_phash(warehouse, _batch(spark, [(4, _T3)]))
-    assert (res.n_accepted, res.n_rejected) == (0, 1)
-    assert res.rejected == [(4, 3, 0)]
-
-
-def test_reconcile_heals_reingestion_crash(spark, warehouse):
-    """The subtler crash: a RE-INGESTED doc's corpus upsert lands but
-    the index rebuild doesn't — the doc_id is still present in the
-    index, just under the OLD content's band values. An id-presence
-    check would call that healthy; the tuple-level diff rewrites the
-    doc's rows, so dups of the NEW content reject and dups of the
-    REPLACED content admit again."""
-    from qms_datawarehouse_spark.operators.merge import merge_upsert
-    from qms_datawarehouse_spark.operators.phash_gate import (
-        _hash_batch,
-        reconcile_phash_index,
-    )
-
-    ingest_image_phash(warehouse, _batch(spark, [(7, _T4)]))
-    # the crash: corpus now says 7 == hash(_T5); index still bands(_T4)
-    ph_new = _hash_batch(_batch(spark, [(7, _T5)]))
-    merge_upsert(
-        warehouse,
-        CORPUS_TABLE,
-        ph_new.withColumn("_id", F.col("doc_id").cast("string")),
-        key="_id",
-        order_col=None,
-    )
-    assert reconcile_phash_index(warehouse) == 1
-    assert warehouse.read(INDEX_TABLE).count() == 4  # old rows replaced
-
-    res_new = ingest_image_phash(warehouse, _batch(spark, [(8, _T5)]))
-    assert (res_new.n_accepted, res_new.n_rejected) == (0, 1)
-    assert res_new.rejected == [(8, 7, 0)]
-    assert res_new.rejected_ids == [8]
-    res_old = ingest_image_phash(warehouse, _batch(spark, [(9, _T4)]))
-    assert (res_old.n_accepted, res_old.n_rejected) == (1, 0)
-
-
 def test_rejected_ids_exact_under_capped_pair_report(spark, warehouse):
     """rejected_ids stays EXACT (distinct ids, O(batch)) even when the
     pair REPORT is capped to fewer entries than there are pairs."""
@@ -355,40 +289,6 @@ def test_rejected_ids_exact_under_capped_pair_report(spark, warehouse):
     assert len(res.rejected) == 1
     assert res.rejected_ids == [2, 4]
     assert res.n_rejected == 2
-
-
-def test_reconcile_noop_when_consistent(spark, warehouse):
-    from qms_datawarehouse_spark.operators.phash_gate import (
-        reconcile_phash_index,
-    )
-
-    ingest_image_phash(warehouse, _batch(spark, [(1, _T1), (3, _T3)]))
-    assert reconcile_phash_index(warehouse) == 0
-    assert warehouse.read(INDEX_TABLE).count() == 8
-
-
-def test_reconcile_builds_index_from_scratch(spark, warehouse):
-    """Crash before the FIRST index write: corpus exists, index table
-    doesn't — reconcile derives the whole index from stored hashes."""
-    from qms_datawarehouse_spark.operators.merge import merge_upsert
-    from qms_datawarehouse_spark.operators.phash_gate import (
-        _hash_batch,
-        reconcile_phash_index,
-    )
-
-    ph = _hash_batch(_batch(spark, [(1, _T1), (3, _T3)]))
-    merge_upsert(
-        warehouse,
-        CORPUS_TABLE,
-        ph.withColumn("_id", F.col("doc_id").cast("string")),
-        key="_id",
-        order_col=None,
-    )
-    assert not warehouse.table_exists(INDEX_TABLE)
-    assert reconcile_phash_index(warehouse) == 2
-    assert warehouse.read(INDEX_TABLE).count() == 8
-    res = ingest_image_phash(warehouse, _batch(spark, [(4, _T1)]))
-    assert (res.n_accepted, res.n_rejected) == (0, 1)
 
 
 # --------------------------------------------------------------------

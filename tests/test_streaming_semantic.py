@@ -1,4 +1,4 @@
-"""Streaming SemDeDup gate: stream_ingest_semantic ≡ sequential batch
+"""Streaming SemDeDup gate: stream_ingest ≡ sequential batch
 ingest_semantic calls, with effectively-once replay convergence —
 the same contract test_incremental_dedup proves for the MinHash gate."""
 
@@ -11,9 +11,10 @@ from pyspark.sql import functions as F
 
 from qms_datawarehouse_spark.operators.semantic_gate import (
     CORPUS_TABLE,
+    SEMANTIC_GATE,
     ingest_semantic,
 )
-from qms_datawarehouse_spark.streaming.sync import stream_ingest_semantic
+from qms_datawarehouse_spark.streaming.sync import stream_ingest
 from qms_datawarehouse_spark.warehouse import ParquetWarehouse
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -74,9 +75,12 @@ def test_stream_gate_matches_sequential_batch_calls(spark, tmp_path):
     results = []
 
     def run():
-        q = stream_ingest_semantic(
+        q = stream_ingest(
             spark.readStream.schema(emb.schema).parquet(str(feed)),
             wh_s,
+            SEMANTIC_GATE,
+            "vec_id",
+            "embedding",
             checkpoint_dir=ckpt,
             available_now=True,
             on_result=lambda epoch, res: results.append(res),
@@ -112,9 +116,12 @@ def test_stream_gate_replay_converges(spark, tmp_path):
     results = []
 
     def run():
-        q = stream_ingest_semantic(
+        q = stream_ingest(
             spark.readStream.schema(emb.schema).parquet(str(feed)),
             wh,
+            SEMANTIC_GATE,
+            "vec_id",
+            "embedding",
             checkpoint_dir=str(ckpt),
             available_now=True,
             on_result=lambda epoch, res: results.append(res),
@@ -144,9 +151,12 @@ def test_stream_gate_rejects_non_numeric_ids(spark, tmp_path):
     feed = tmp_path / "feed"
     bad.coalesce(1).write.parquet(str(feed))
     wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
-    q = stream_ingest_semantic(
+    q = stream_ingest(
         spark.readStream.schema(bad.schema).parquet(str(feed)),
         wh,
+        SEMANTIC_GATE,
+        "vec_id",
+        "embedding",
         checkpoint_dir=str(tmp_path / "ckpt"),
         available_now=True,
     )

@@ -211,3 +211,28 @@ def test_version_meta_crash_before_swap_is_invisible(spark, warehouse):
         with pytest.raises(RuntimeError, match="crash"):
             warehouse.write_version("c", df, extra_meta={"epoch": 2})
     assert warehouse.read_version_meta("c") == {"epoch": 1}
+
+
+def test_staged_partitioned_version_is_clustered(spark, warehouse):
+    """A version staged in a transaction gets write_version's
+    clustering: about one file per partition dir, not one per
+    upstream task in every dir."""
+    from qms_datawarehouse_spark.operators.transaction import (
+        MultiTableTransaction,
+    )
+
+    df = spark.range(0, 640, numPartitions=32).select(
+        F.col("id"), F.pmod(F.col("id"), F.lit(4)).alias(BUCKET_COL)
+    )
+    txn = MultiTableTransaction(warehouse)
+    txn.stage_write("staged", df, partition_by=[BUCKET_COL])
+    txn.commit()
+    vdir = warehouse.current_version_dir("staged")
+    dirs = [d for d in os.listdir(vdir) if d.startswith(f"{BUCKET_COL}=")]
+    assert len(dirs) == 4
+    for d in dirs:
+        files = [
+            f for f in os.listdir(os.path.join(vdir, d)) if f.endswith(".parquet")
+        ]
+        assert len(files) <= 1, (d, files)
+    assert warehouse.read("staged").count() == 640

@@ -47,6 +47,11 @@ def main(argv: list[str] | None = None) -> int:
         redact_pii,
         stratified_sample,
     )
+    from qms_datawarehouse_spark.operators.incremental_dedup import ingest_dedup
+    from qms_datawarehouse_spark.operators.phash_gate import (
+        ingest_audio_fingerprint,
+        ingest_image_phash,
+    )
     from qms_datawarehouse_spark.session import get_spark
     from qms_datawarehouse_spark.warehouse import ParquetWarehouse
 
@@ -243,26 +248,14 @@ def main(argv: list[str] | None = None) -> int:
         return frame
 
     if args.phash_gate:
-        from qms_datawarehouse_spark.operators.phash_gate import (
-            ingest_image_phash,
-        )
-
         df = _payload_gate(df, ingest_image_phash, "phash-gate", "image")
 
     if args.audio_gate:
-        from qms_datawarehouse_spark.operators.phash_gate import (
-            ingest_audio_fingerprint,
-        )
-
         df = _payload_gate(
             df, ingest_audio_fingerprint, "audio-gate", "audio"
         )
 
     if args.ingest_gate:
-        from qms_datawarehouse_spark.operators.incremental_dedup import (
-            ingest_dedup,
-        )
-
         res = ingest_dedup(wh, df, corpus_table=args.out)
         print(
             f"ingest-gated {args.out}: {res.n_batch} in, "

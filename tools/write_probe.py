@@ -145,198 +145,120 @@ def probe_apply_changes(spark, sf_dir: str, n_buckets: int) -> float:
         shutil.rmtree(root, ignore_errors=True)
 
 
-def probe_ingest(spark, sf_dir: str) -> float:
+def _probe_band_gate(spark, kernel, corpus, batch) -> float:
+    """Seed a band gate's state directly from ``corpus`` (keyed corpus
+    + bv-partitioned key index — identical to what batched admission
+    leaves behind, without paying the untimed in-batch self-join),
+    then time one fixed batch through the gate. The probe prunes to
+    the batch's bv-partitions, so the claim under test is per-batch
+    cost O(batch): touched index partitions grow mildly with the
+    corpus; O(corpus) is not acceptable."""
     import tempfile as tf
 
     from pyspark.sql import functions as F
 
-    from qms_datawarehouse_spark.operators.dedup import (
-        _shingled,
-        minhash_bands,
-    )
-    from qms_datawarehouse_spark.operators.incremental_dedup import (
-        BVB_COL,
-        CORPUS_TABLE,
-        INDEX_TABLE,
-        _bv_bucket,
-        ingest_dedup,
-    )
+    from qms_datawarehouse_spark.operators.incremental_dedup import admit
     from qms_datawarehouse_spark.operators.merge import merge_upsert
     from qms_datawarehouse_spark.warehouse import ParquetWarehouse
 
-    root = tf.mkdtemp(prefix="wp_ingest_")
+    root = tf.mkdtemp(prefix="wp_gate_")
     try:
         wh = ParquetWarehouse(spark, root)
-        corpus = _docs(spark, sf_dir)
-        # seed the gate state directly (corpus + bv-partitioned band
-        # index) — identical to what batched ingest_dedup leaves
-        # behind, without paying the untimed in-batch self-join
+        corpus = kernel.project(corpus)
+        feat = kernel.features(corpus, None)
         merge_upsert(
             wh,
-            CORPUS_TABLE,
-            corpus.withColumn("_id", F.col("doc_id").cast("string")),
+            kernel.corpus_table,
+            (corpus if kernel.keep_payload else feat).withColumn(
+                "_id", F.col(kernel.id_col).cast("string")
+            ),
             key="_id",
             order_col=None,
             n_buckets=SEED_BUCKETS,
         )
-        bands = minhash_bands(_shingled(corpus)).withColumn(
-            BVB_COL, _bv_bucket()
-        )
-        wh.write_version(INDEX_TABLE, bands, partition_by=[BVB_COL])
-        # fresh batch: novel token suffix => no near-dups, all admitted
-        batch = (
-            corpus.orderBy("doc_id")
-            .limit(50)
-            .select(
-                (F.col("doc_id") + 10**12).alias("doc_id"),
-                F.regexp_replace(F.col("text"), r"(\S+)", "$1zz").alias(
-                    "text"
-                ),
-            )
+        wh.write_version(
+            kernel.index_table,
+            kernel.keys(feat).withColumn(kernel.part_col, kernel.part()),
+            partition_by=[kernel.part_col],
         )
         batch.collect()
         t0 = time.monotonic()
-        ingest_dedup(wh, batch)
+        admit(wh, kernel, batch)
         return time.monotonic() - t0
     finally:
         shutil.rmtree(root, ignore_errors=True)
+
+
+def _fresh_batch(spark, sf_dir: str, payload):
+    """50 documents under new ids with ``payload(text)`` as content."""
+    from pyspark.sql import functions as F
+
+    return (
+        _docs(spark, sf_dir)
+        .orderBy("doc_id")
+        .limit(50)
+        .select((F.col("doc_id") + 10**12).alias("doc_id"), payload(F.col("text")))
+    )
+
+
+def probe_ingest(spark, sf_dir: str) -> float:
+    """The MinHash gate; the fresh batch's novel token suffix means no
+    near-dups, so every doc is admitted."""
+    from pyspark.sql import functions as F
+
+    from qms_datawarehouse_spark.operators.incremental_dedup import MINHASH_GATE
+
+    batch = _fresh_batch(
+        spark, sf_dir,
+        lambda t: F.regexp_replace(t, r"(\S+)", "$1zz").alias("text"),
+    )
+    return _probe_band_gate(spark, MINHASH_GATE, _docs(spark, sf_dir), batch)
+
+
+def _payloads(spark, sf_dir: str):
+    from pyspark.sql import functions as F
+
+    return _docs(spark, sf_dir).select(
+        "doc_id", F.encode(F.col("text"), "UTF-8").alias("content")
+    )
 
 
 def probe_ingest_phash(spark, sf_dir: str) -> float:
-    """Seed the image-phash gate state directly (hash-row corpus +
-    bv-partitioned band index — identical to what batched ingestion
-    leaves behind, without paying the untimed in-batch stage), then
-    time one fixed 50-payload batch through ``ingest_image_phash``.
-    The probe prunes to the batch's bv-partitions, so the claim under
-    test is per-batch cost O(batch) — flat at any corpus size."""
-    import tempfile as tf
-
+    """The image-phash gate. The fresh batch's REVERSED text
+    decorrelates the bigram bag (the hash (a*31+b)%256 does not
+    commute with reversal), so it carries no constructed near-dups of
+    its source docs."""
     from pyspark.sql import functions as F
 
-    from qms_datawarehouse_spark.operators.incremental_dedup import (
-        BVB_COL,
-        _bv_bucket,
-    )
-    from qms_datawarehouse_spark.operators.merge import merge_upsert
-    from qms_datawarehouse_spark.operators.phash_gate import (
-        CORPUS_TABLE,
-        INDEX_TABLE,
-        _band_rows,
-        _hash_batch,
-        ingest_image_phash,
-    )
-    from qms_datawarehouse_spark.warehouse import ParquetWarehouse
+    from qms_datawarehouse_spark.operators.phash_gate import IMAGE_GATE
 
-    root = tf.mkdtemp(prefix="wp_phash_")
-    try:
-        wh = ParquetWarehouse(spark, root)
-        payloads = _docs(spark, sf_dir).select(
-            "doc_id", F.encode(F.col("text"), "UTF-8").alias("content")
-        )
-        hashes = _hash_batch(payloads)
-        merge_upsert(
-            wh,
-            CORPUS_TABLE,
-            hashes.withColumn("_id", F.col("doc_id").cast("string")),
-            key="_id",
-            order_col=None,
-            n_buckets=SEED_BUCKETS,
-        )
-        wh.write_version(
-            INDEX_TABLE,
-            _band_rows(hashes).withColumn(BVB_COL, _bv_bucket()),
-            partition_by=[BVB_COL],
-        )
-        # fresh batch: REVERSED text decorrelates the bigram bag (the
-        # hash (a*31+b)%256 does not commute with reversal), so the
-        # batch carries no constructed near-dups of its source docs
-        batch = (
-            _docs(spark, sf_dir)
-            .orderBy("doc_id")
-            .limit(50)
-            .select(
-                (F.col("doc_id") + 10**12).alias("doc_id"),
-                F.encode(F.reverse(F.col("text")), "UTF-8").alias(
-                    "content"
-                ),
-            )
-        )
-        batch.collect()
-        t0 = time.monotonic()
-        ingest_image_phash(wh, batch)
-        return time.monotonic() - t0
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    batch = _fresh_batch(
+        spark, sf_dir,
+        lambda t: F.encode(F.reverse(t), "UTF-8").alias("content"),
+    )
+    return _probe_band_gate(spark, IMAGE_GATE, _payloads(spark, sf_dir), batch)
 
 
 def probe_ingest_audio(spark, sf_dir: str) -> float:
-    """The phash write probe under the AUDIO kernel (shared gate core,
-    different fingerprint): seed the audio gate state, then time one
-    fixed 50-payload batch through ``ingest_audio_fingerprint``.
-    Decorrelation transform differs from the image probe's REVERSAL
-    because the 3-byte window SUM is commutative — a reversed payload
-    has the IDENTICAL energy bag (Hamming 0, measured), so reversed
-    batches would be 100%% constructed near-dups; a Caesar-13 letter
-    rotation is non-linear on byte values (wrap) and measures min
-    self-distance 13."""
-    import tempfile as tf
-
+    """The phash probe under the AUDIO kernel (shared gate core,
+    different fingerprint). Decorrelation transform differs from the
+    image probe's REVERSAL because the 3-byte window SUM is
+    commutative — a reversed payload has the IDENTICAL energy bag
+    (Hamming 0, measured), so reversed batches would be 100%%
+    constructed near-dups; a Caesar-13 letter rotation is non-linear
+    on byte values (wrap) and measures min self-distance 13."""
     from pyspark.sql import functions as F
 
-    from qms_datawarehouse_spark.operators.incremental_dedup import (
-        BVB_COL,
-        _bv_bucket,
-    )
-    from qms_datawarehouse_spark.operators.merge import merge_upsert
-    from qms_datawarehouse_spark.operators.multimodal import audio_fp_bands
-    from qms_datawarehouse_spark.operators.phash_gate import (
-        AUDIO_CORPUS_TABLE,
-        AUDIO_INDEX_TABLE,
-        _band_rows,
-        _hash_batch,
-        ingest_audio_fingerprint,
-    )
-    from qms_datawarehouse_spark.warehouse import ParquetWarehouse
+    from qms_datawarehouse_spark.operators.phash_gate import AUDIO_GATE
 
-    root = tf.mkdtemp(prefix="wp_audio_")
-    try:
-        wh = ParquetWarehouse(spark, root)
-        payloads = _docs(spark, sf_dir).select(
-            "doc_id", F.encode(F.col("text"), "UTF-8").alias("content")
-        )
-        hashes = _hash_batch(payloads, kernel=audio_fp_bands)
-        merge_upsert(
-            wh,
-            AUDIO_CORPUS_TABLE,
-            hashes.withColumn("_id", F.col("doc_id").cast("string")),
-            key="_id",
-            order_col=None,
-            n_buckets=SEED_BUCKETS,
-        )
-        wh.write_version(
-            AUDIO_INDEX_TABLE,
-            _band_rows(hashes).withColumn(BVB_COL, _bv_bucket()),
-            partition_by=[BVB_COL],
-        )
-        alpha = "abcdefghijklmnopqrstuvwxyz"
-        batch = (
-            _docs(spark, sf_dir)
-            .orderBy("doc_id")
-            .limit(50)
-            .select(
-                (F.col("doc_id") + 10**12).alias("doc_id"),
-                F.encode(
-                    F.translate(F.col("text"), alpha, alpha[13:] + alpha[:13]),
-                    "UTF-8",
-                ).alias("content"),
-            )
-        )
-        batch.collect()
-        t0 = time.monotonic()
-        ingest_audio_fingerprint(wh, batch)
-        return time.monotonic() - t0
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    alpha = "abcdefghijklmnopqrstuvwxyz"
+    batch = _fresh_batch(
+        spark, sf_dir,
+        lambda t: F.encode(
+            F.translate(t, alpha, alpha[13:] + alpha[:13]), "UTF-8"
+        ).alias("content"),
+    )
+    return _probe_band_gate(spark, AUDIO_GATE, _payloads(spark, sf_dir), batch)
 
 
 def probe_ingest_semantic(spark, sf_dir: str, k: int) -> float:
