@@ -24,10 +24,11 @@ Cost shape = the merge's: winners resolve in one key-partitioned
 window; the main table is read AND written only in the buckets the
 batch's keys hash into (hardlink-inherited elsewhere); the tombstone
 probe is pruned to the same buckets (same key, same bucket count ⇒
-same dirs). Main + tombstone versions commit atomically through the
-multi-table transaction, so a reader never sees a delete applied but
-its tombstone missing (a crash between the two would silently
-re-admit the late upsert).
+same dirs). Every apply stages the main table and (when the batch
+deletes) the tombstones, then commits both in ONE journaled commit —
+the first batch too, creating either table inside it — so a reader
+never sees a delete applied but its tombstone missing (a crash
+between the two would silently re-admit the late upsert).
 
 Sequence ties are deterministic: delete beats upsert, then a stable
 row hash — replaying a batch converges (T3), like every write path
@@ -42,9 +43,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from qms_datawarehouse_spark.operators.merge import (
+    _merge_upsert_once,
+    _pinned_target,
     _resolve_buckets,
     dedup_last_write_wins,
-    merge_upsert,
     with_bucket,
 )
 from qms_datawarehouse_spark.plans.registry import query, tables
@@ -449,12 +451,11 @@ def _apply_changes_once(
     live = None
     try:
         # ONE driver action (pre-suppression) for the per-batch winner
-        # stats AND every bucket list the rest of the apply needs —
-        # the tombstone probe's pruning, the delete-touched tombstone
-        # buckets, and the main-table touched set all derive from this
+        # stats AND the main table's bucket lists — the tombstone
+        # probe's pruning and the touched set both derive from this
         # collect (a streaming epoch otherwise pays a job launch per
         # lookup). Suppression counts need the tombstone join, so the
-        # tombstone path pays exactly one more action below.
+        # tombstone probe pays exactly one more action below.
         stat_rows = win.groupBy(BUCKET_COL, op_col).count().collect()
         n_win = int(sum(r["count"] for r in stat_rows))
         n_del = int(
@@ -468,24 +469,24 @@ def _apply_changes_once(
         touched_all = sorted(total_by_bucket)
 
         # ---- tombstone suppression of late upserts --------------------
-        tomb_base = None
-        tomb_empty = True
-        if warehouse.table_exists(tomb):
-            tomb_base = warehouse.current_version_name(tomb)
-            tomb_target = warehouse.read(tomb, version=tomb_base)
-            tomb_empty = not tomb_target.take(1)
-        supp_by_bucket: dict = {}
-        if tomb_base is not None and not tomb_empty:
+        # Both bases are pinned before anything is read, the main one
+        # first: a rival apply that commits a delete (main + tombstone
+        # in one commit) after these reads fails the main table's CAS,
+        # so this batch never resolves against a main version whose
+        # tombstones its probe did not see. Probe only a tombstone
+        # version holding rows (a directory listing, no job): absent
+        # or emptied, it suppresses nothing.
+        base, target = _pinned_target(warehouse, table, win.drop(op_col))
+        tomb_base = warehouse.current_version_name(tomb)
+        probe = tomb_base is not None and warehouse.has_data(tomb, tomb_base)
+        if probe:
             # probe pruned to the batch's buckets (partition pruning at
-            # the tombstone scan). NO forced broadcast: the probe side
-            # is usually vacuum-bounded and tiny, but a bulk-delete
-            # feed (compliance purge) can make it arbitrarily large
-            # inside one retention window — let AQE pick the join
-            # strategy from the runtime size instead of OOMing the
-            # exact batch where CDC matters most.
-            tombs = tomb_target.filter(
-                F.col(BUCKET_COL).isin(touched_all)
-            ).select(F.col(key), F.col(seq_col).alias("__tomb_seq"))
+            # the tombstone scan); no forced broadcast (_probe_tombstones)
+            tombs = (
+                warehouse.read(tomb, version=tomb_base)
+                .filter(F.col(BUCKET_COL).isin(touched_all))
+                .select(F.col(key), F.col(seq_col).alias("__tomb_seq"))
+            )
             win_t = _probe_tombstones(win, tombs, key)
         else:
             win_t = win.withColumn("__tomb_seq", F.lit(None).cast("long"))
@@ -494,7 +495,8 @@ def _apply_changes_once(
         ).isNotNull() & (F.col("__tomb_seq") >= F.col(seq_col))
         live = win_t.filter(~suppressed).drop("__tomb_seq").persist()
 
-        if tomb_base is not None and not tomb_empty:
+        supp_by_bucket: dict = {}
+        if probe:
             # the tombstone path's one extra action: per-bucket
             # suppressed counts (deletes are never suppressed)
             for r in (
@@ -503,41 +505,16 @@ def _apply_changes_once(
                 supp_by_bucket[r[BUCKET_COL]] = r["count"]
         n_suppressed = int(sum(supp_by_bucket.values()))
         n_up = n_win - n_del - n_suppressed
-        live_buckets = sorted(
+        touched = sorted(
             b
             for b, total in total_by_bucket.items()
             if total - supp_by_bucket.get(b, 0) > 0
         )
-
-        deletes = live.filter(F.col(op_col) == OP_DELETE)
-        upserts = live.filter(F.col(op_col) == OP_UPSERT).drop(op_col)
-
-        # ---- first write: nothing to resolve against ------------------
-        if not warehouse.table_exists(table):
-            # tombstones FIRST: a crash in between leaves suppression
-            # without the (empty) apply — the safe direction
-            if n_del:
-                merge_upsert(
-                    warehouse, tomb,
-                    deletes.select(key, seq_col),
-                    key=key, order_col=seq_col, n_buckets=buckets,
-                )
-            if n_up:
-                merge_upsert(
-                    warehouse, table, upserts, key=key, order_col=seq_col,
-                    n_buckets=buckets,
-                )
-            return ApplyChangesStats(n_win, n_up, n_del, n_suppressed)
+        stats = ApplyChangesStats(n_win, n_up, n_del, n_suppressed)
+        if not touched:  # every upsert suppressed: nothing changes
+            return stats
 
         # ---- resolve main table in its touched buckets ----------------
-        base = warehouse.current_version_name(table)
-        target = warehouse.read(table, version=base)
-        # a table previously emptied by deletes has a version with no
-        # bucket dirs to inherit — partial writes refuse (loudly, to
-        # protect untouched data); a full write of the batch is O(batch)
-        # here anyway
-        target_empty = not target.take(1)
-        touched = live_buckets
         contested = target.filter(F.col(BUCKET_COL).isin(touched))
         if seq_col not in contested.columns:
             # legacy rows without a sequence lose to any change
@@ -557,85 +534,30 @@ def _apply_changes_once(
             .drop("__rn", "__prec", op_col)
         )
 
-        if not n_del:
-            if target_empty:
-                warehouse.write_version(
-                    table, resolved, partition_by=[BUCKET_COL],
-                    expect_base=base,
-                )
-            else:
-                warehouse.write_version_partial(
-                    table, resolved, touched, base_version=base
-                )
-            return ApplyChangesStats(n_win, n_up, n_del, n_suppressed)
-
-        # ---- deletes present: main + tombstones flip together ---------
-        if tomb_base is not None:
-            touched_tb = sorted(
-                {r[BUCKET_COL] for r in stat_rows if r[op_col] == OP_DELETE}
-            )
-            contested_tomb = (
-                warehouse.read(tomb, version=tomb_base)
-                .filter(F.col(BUCKET_COL).isin(touched_tb))
-            )
-            # tombstones are MONOTONE: per key keep the max delete
-            # sequence across stored ∪ batch — an order-blind
-            # updates-win merge here would let a redelivered OLDER
-            # delete regress the tombstone and re-admit a superseded
-            # upsert
-            new_tomb = with_bucket(
-                contested_tomb.select(key, seq_col)
-                .unionByName(deletes.select(key, seq_col))
-                .groupBy(key)
-                .agg(F.max(seq_col).alias(seq_col)),
-                key,
-                buckets,
-            )
-            txn = MultiTableTransaction(warehouse)
-            if target_empty:
-                # full write, CAS pinned to the version the resolution
-                # was computed against (stage-time re-resolution would
-                # silently clobber an interleaved commit)
-                txn.stage_write(
-                    table, resolved, partition_by=[BUCKET_COL],
-                    expect_base=base,
-                )
-            else:
-                txn.stage_write_partial(
-                    table, resolved, touched, base_version=base
-                )
-            if tomb_empty:
-                # an emptied (post-vacuum) tombstone version has no
-                # bucket dirs to inherit — stage a full version
-                txn.stage_write(
-                    tomb, new_tomb, partition_by=[BUCKET_COL],
-                    expect_base=tomb_base,
-                )
-            else:
-                txn.stage_write_partial(
-                    tomb, new_tomb, touched_tb, base_version=tomb_base
-                )
-            txn.commit()
-        else:
-            # no tombstone table yet: create it inside the txn window
-            # is not supported (create-on-first-write is single-table),
-            # so create it FIRST — worst case a crash leaves tombstones
-            # for deletes not yet applied, which only suppresses what
-            # the replayed batch will delete again (safe direction).
-            merge_upsert(
-                warehouse, tomb, deletes.select(key, seq_col),
-                key=key, order_col=seq_col, n_buckets=buckets,
-            )
-            if target_empty:
-                warehouse.write_version(
-                    table, resolved, partition_by=[BUCKET_COL],
-                    expect_base=base,
-                )
-            else:
-                warehouse.write_version_partial(
-                    table, resolved, touched, base_version=base
-                )
-        return ApplyChangesStats(n_win, n_up, n_del, n_suppressed)
+        # ---- main table + tombstones: one commit ----------------------
+        # Tombstones are MONOTONE: the keyed merge ordered by seq_col
+        # keeps the max delete sequence per key across stored ∪ batch,
+        # so a redelivered OLDER delete cannot regress a tombstone and
+        # re-admit a superseded upsert. Their commit CASes against the
+        # version the probe read, not the one the merge staged on.
+        txn = MultiTableTransaction(warehouse)
+        try:
+            txn.enlist(table, *warehouse._stage_version_partial(
+                table, resolved, touched, base_version=base,
+                table_meta={"n_buckets": buckets, "key": key, "order_col": seq_col},
+            ))
+            if n_del:
+                version = _merge_upsert_once(
+                    warehouse, tomb,
+                    live.filter(F.col(op_col) == OP_DELETE).select(key, seq_col),
+                    key, seq_col, buckets,
+                )[2][0]
+                txn.enlist(tomb, version, tomb_base)
+        except BaseException:
+            txn.abort()
+            raise
+        txn.commit()
+        return stats
     finally:
         if live is not None:
             live.unpersist()

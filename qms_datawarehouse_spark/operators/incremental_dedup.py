@@ -39,7 +39,7 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from qms_datawarehouse_spark.operators.merge import _merge_upsert_once, with_bucket
+from qms_datawarehouse_spark.operators.merge import _merge_upsert_once
 from qms_datawarehouse_spark.operators.transaction import MultiTableTransaction
 from qms_datawarehouse_spark.warehouse import BUCKET_COL, ParquetWarehouse
 
@@ -327,24 +327,10 @@ def _stage_corpus(
     """Keyed upsert of ``rows`` into the ``_id``-bucketed corpus
     (re-ingested ids replace their row), staged in ``txn``."""
     rows = rows.withColumn("_id", F.col(k.id_col).cast("string"))
-    if warehouse.table_exists(k.corpus_table):
-        staged = _merge_upsert_once(
-            warehouse, k.corpus_table, rows, "_id", None, n_buckets, stage=True
-        )[2]
-        txn.enlist(k.corpus_table, *staged)
-        return
-    # meta before data is safe: a table's meta is read only once its
-    # _CURRENT exists (merge._resolve_buckets), so meta left by a
-    # batch that never commits stays inert
-    warehouse.write_meta(
-        k.corpus_table, {"n_buckets": n_buckets, "key": "_id", "order_col": None}
-    )
-    txn.stage_write(
-        k.corpus_table,
-        with_bucket(rows, "_id", n_buckets),
-        partition_by=[BUCKET_COL],
-        expect_base=None,
-    )
+    staged = _merge_upsert_once(
+        warehouse, k.corpus_table, rows, "_id", None, n_buckets
+    )[2]
+    txn.enlist(k.corpus_table, *staged)
 
 
 def _stale_parts(
@@ -394,22 +380,20 @@ def _stage_replace(
     partitions in ``stale_parts`` are touched too. Maintenance stays
     O(touched partitions): the rest is hardlink-inherited from the
     base version the commit CASes against."""
-    if not warehouse.table_exists(table):
-        txn.stage_write(table, rows, partition_by=[k.part_col], expect_base=None)
-        return
     parts = rows.select(k.part_col)
     if stale_parts is not None:
         parts = parts.unionByName(stale_parts)
     touched = [r[0] for r in parts.distinct().collect()]
     base = warehouse.current_version_name(table)
-    kept = (
-        warehouse.read(table, version=base)
-        .filter(F.col(k.part_col).isin(touched))
-        .join(rows.select(k.id_col), k.id_col, "left_anti")
-    )
+    if base is not None:
+        rows = (
+            warehouse.read(table, version=base)
+            .filter(F.col(k.part_col).isin(touched))
+            .join(rows.select(k.id_col), k.id_col, "left_anti")
+            .unionByName(rows)
+        )
     txn.stage_write_partial(
-        table, kept.unionByName(rows), touched,
-        partition_col=k.part_col, base_version=base,
+        table, rows, touched, partition_col=k.part_col, base_version=base
     )
 
 

@@ -30,10 +30,9 @@ delta rule, specialized to the warehouse's physical layout:
   path);
 - staleness is two version-name compares; if either recorded base
   version was garbage-collected, or a base lost its bucket layout, or
-  the dim diff exceeds ``max_dim_keys``, or the MV's current version
-  cannot take a partial write (e.g. it holds zero rows and therefore
-  no partition dirs), refresh falls back to a full recompute —
-  correct, just not incremental;
+  the dim diff exceeds ``max_dim_keys``, refresh falls back to a full
+  recompute — correct, just not incremental. A zero-row MV refreshes
+  incrementally: its touched rows are its whole content;
 - commit protocol (round 11, shared with the aggregate layer): the
   reflected base versions ride INSIDE the MV version
   (``extra_meta`` → one atomic pointer swap), so there is no
@@ -239,9 +238,8 @@ def refresh_join_matview(
     Falls back to a full recompute when either base's recorded
     version is gone, either lacks the bucket layout, the dim diff
     exceeds ``max_dim_keys`` (at that batch size the semi-joined
-    fact scan stops being cheaper than the rewrite), or the MV's
-    current version cannot take a partial write (no partition dirs /
-    concurrently advanced) — the fallback is always correct."""
+    fact scan stops being cheaper than the rewrite) — the fallback is
+    always correct."""
     import os
 
     meta = warehouse.read_meta(name)
@@ -389,14 +387,12 @@ def refresh_join_matview(
         dim_cols,
     )
     try:
+        # a zero-row MV has nothing to inherit: its touched rows are its
+        # whole content, and the staging rule writes them as a full
+        # version (still CASed on mv_base)
         warehouse.write_version_partial(
             name, rows, tl, base_version=mv_base, extra_meta=lineage
         )
-    except ValueError:
-        # no partition dirs to inherit (zero-row MV) — the documented
-        # contract: the full rewrite is always correct (and still
-        # CASed on mv_base; no rival has committed in this branch)
-        return _full()
     except ConcurrentWriteError:
         # the MV version advanced under us: a rival refresh committed
         # newer data/lineage. Retry the WHOLE refresh against the

@@ -364,19 +364,17 @@ def refresh_matview(warehouse: ParquetWarehouse, name: str) -> str:
                 group_cols,
                 n_buckets,
             )
-            try:
-                warehouse.write_version_partial(
-                    name,
-                    merged,
-                    touched,
-                    partition_col=MV_BUCKET_COL,
-                    base_version=mv_version,
-                    extra_meta={"mv_base_version": current},
-                )
-            except ValueError:
-                # no partition dirs to inherit (empty create) —
-                # fallback is always correct
-                return _full()
+            # a zero-row MV has nothing to inherit: its touched rows
+            # are its whole content, and the staging rule writes them
+            # as a full version
+            warehouse.write_version_partial(
+                name,
+                merged,
+                touched,
+                partition_col=MV_BUCKET_COL,
+                base_version=mv_version,
+                extra_meta={"mv_base_version": current},
+            )
             # ConcurrentWriteError propagates — the unbucketed
             # contract (loser gets the conflict): an un-CASed _full()
             # here would blind-overwrite the rival's committed (and

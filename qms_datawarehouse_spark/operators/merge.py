@@ -14,7 +14,10 @@ Spark-first design (no transactional format in this image):
    writes a bucketed version and persists ``n_buckets`` in the table's
    ``_META.json`` — later merges validate against it instead of
    trusting the caller (a mismatched bucket count re-hashes keys into
-   different dirs and would strand stale rows).
+   different dirs and would strand stale rows). The commit records it
+   under the table lock, so only the creator that wins writes it. A
+   table written unbucketed (``stream_split_sync`` before it merged
+   by key) is rebucketed whole by its next merge, in that commit.
 3. **Partial merge**: the target is hash-bucketed on the key into
    ``_bucket`` partition dirs (see warehouse.py). Only buckets present
    in the update batch are read AND written:
@@ -25,7 +28,8 @@ Spark-first design (no transactional format in this image):
        resolved  = last-write-wins over contested ∪ updates
        write touched-bucket dirs; every untouched bucket dir is
        inherited from the previous version by hardlink
-       (warehouse.write_version_partial); swap pointer atomically.
+       (warehouse._stage_version_partial); one journaled commit
+       (warehouse._commit) swaps the pointer.
 
    An incremental batch therefore costs O(touched-bucket bytes) of
    I/O — read and write — plus O(n_buckets) filesystem-metadata ops.
@@ -44,7 +48,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from qms_datawarehouse_spark.warehouse import BUCKET_COL, ParquetWarehouse
+from qms_datawarehouse_spark.warehouse import (
+    BUCKET_COL,
+    ConcurrentWriteError,
+    ParquetWarehouse,
+)
 
 DEFAULT_BUCKETS = 32  # local[32] testing; set ~8192 for a 100 TB table
 
@@ -106,6 +114,23 @@ def _resolve_buckets(
     return int(n_buckets) if n_buckets is not None else DEFAULT_BUCKETS
 
 
+def _pinned_target(
+    warehouse: ParquetWarehouse, table: str, like: DataFrame
+) -> tuple[str | None, DataFrame]:
+    """``(base, target)`` for a keyed merge: the current version and a
+    read pinned to it, or — before the table's first commit — None and
+    an empty frame shaped like ``like``.
+
+    Capture the base BEFORE reading: the commit CASes against it, so a
+    writer landing anywhere in between flips the CAS instead of being
+    silently resolved away in the touched buckets (the
+    read-current/commit-against-newer TOCTOU)."""
+    base = warehouse.current_version_name(table)
+    if base is None:
+        return None, like.limit(0)
+    return base, warehouse.read(table, version=base)
+
+
 def merge_upsert(
     warehouse: ParquetWarehouse,
     table: str,
@@ -147,14 +172,15 @@ def merge_upsert_stats(
     batch over newer state can never regress it, T3). After
     ``max_retries`` conflicts it surfaces ``ConcurrentWriteError``.
     """
-    from qms_datawarehouse_spark.warehouse import ConcurrentWriteError
-
     last_exc: Exception | None = None
     for _ in range(max_retries + 1):
         try:
-            return _merge_upsert_once(
+            n, hwm, staged = _merge_upsert_once(
                 warehouse, table, updates, key, order_col, n_buckets
-            )[:2]
+            )
+            if staged is not None:
+                warehouse._commit({table: staged})
+            return n, hwm
         except ConcurrentWriteError as exc:
             last_exc = exc
     raise last_exc
@@ -167,12 +193,10 @@ def _merge_upsert_once(
     key: str,
     order_col: str | None,
     n_buckets: int | None,
-    stage: bool = False,
-) -> tuple[int, object, tuple[str, str] | None]:
-    """One merge attempt: ``(rows, hwm, staged)``. With ``stage=True``
-    the new version is written but not committed, and ``staged`` is its
-    ``(version, base)`` for the caller's transaction; otherwise (and
-    for an empty batch) ``staged`` is None."""
+) -> tuple[int, object, tuple[str, str | None] | None]:
+    """One merge attempt, staged but not committed: ``(rows, hwm,
+    staged)``, where ``staged`` is the new version's ``(version,
+    base)`` for the caller's commit, or None for an empty batch."""
     buckets = _resolve_buckets(warehouse, table, n_buckets)
     batch = dedup_last_write_wins(updates, key, order_col)
     # Persist BEFORE any action: the dedup window + bucket hash compute
@@ -207,37 +231,16 @@ def _merge_upsert_once(
         )
         touched = [r[BUCKET_COL] for r in stats]
 
-        # Capture the base BEFORE reading: the read below is pinned to
-        # this exact version and the commit CASes against it, so a
-        # writer landing anywhere in between flips the CAS instead of
-        # being silently resolved away in the touched buckets (the
-        # read-current/commit-against-newer TOCTOU).
-        base = warehouse.current_version_name(table)
-        if base is None:
-            if stage:
-                # create-on-first-write inside a multi-table txn would
-                # leave meta for a table that may never commit; create
-                # tables first, then merge atomically
-                raise ValueError(
-                    f"atomic merge requires existing table {table!r} "
-                    "(create-on-first-write is single-table only)"
-                )
-            # Create-on-first-write (S11); bucket count becomes a table
-            # fact, not a per-call opinion. expect_base=None: if a racing
-            # writer creates the table first, CAS fails and the retry
-            # takes the merge path instead of clobbering their version.
-            warehouse.write_version(
-                table, batch, partition_by=[BUCKET_COL], expect_base=None
-            )
-            warehouse.write_meta(
-                table,
-                {"n_buckets": buckets, "key": key, "order_col": order_col},
-            )
-            return n, hwm, None
-
-        target = warehouse.read(table, version=base)
-
-        contested = target.filter(F.col(BUCKET_COL).isin(touched))
+        # Create-on-first-write (S11): the batch resolves against no
+        # rows, and the commit expects no table — a racing creator
+        # fails the CAS and the retry merges into its version instead
+        # of clobbering it.
+        base, target = _pinned_target(warehouse, table, batch)
+        legacy = BUCKET_COL not in target.columns
+        if legacy:  # unbucketed layout: every row is contested
+            contested = with_bucket(target, key, buckets)
+        else:
+            contested = target.filter(F.col(BUCKET_COL).isin(touched))
 
         if has_cursor:
             # Order-aware resolution: the newest row by cursor wins
@@ -264,39 +267,24 @@ def _merge_upsert_once(
             )
             resolved = survivors.unionByName(batch, allowMissingColumns=True)
 
+        # the bucket count becomes a table fact, not a per-call opinion
+        facts = {"n_buckets": buckets, "key": key, "order_col": order_col}
+        if legacy:
+            return n, hwm, (
+                warehouse._stage_version(
+                    table, resolved, [BUCKET_COL], table_meta=facts
+                ),
+                base,
+            )
         # Only the touched buckets are materialized; untouched bucket
         # dirs are hardlink-inherited from the PINNED base version —
         # the step that makes incremental cost O(touched), not
         # O(table) — and the commit CASes against that same base.
-        if stage:
-            # stage only — the caller's transaction owns the joint
-            # CAS commit across every table in the batch
-            return n, hwm, warehouse._stage_version_partial(
-                table, resolved, touched, base_version=base
-            )
-        warehouse.write_version_partial(
-            table, resolved, touched, base_version=base
+        return n, hwm, warehouse._stage_version_partial(
+            table, resolved, touched, base_version=base, table_meta=facts
         )
-        return n, hwm, None
     finally:
         batch.unpersist()
-
-
-def merge_dataframes(
-    target: DataFrame,
-    updates: DataFrame,
-    key: str = "_id",
-    order_col: str | None = "updated_at",
-) -> DataFrame:
-    """Pure-DataFrame merge (no I/O): last-write-wins keyed union.
-
-    The logical core of the upsert as a composable operator —
-    ``target ⋉̸ updates ∪ updates`` with in-batch dedup. Used by
-    streaming foreachBatch and by oracle-checked queries.
-    """
-    batch = dedup_last_write_wins(updates, key, order_col)
-    survivors = target.join(batch.select(key), on=key, how="left_anti")
-    return survivors.unionByName(batch, allowMissingColumns=True)
 
 
 def merge_upsert_atomic(
@@ -325,8 +313,9 @@ def merge_upsert_atomic(
     Conflict behaviour: if ANY table's base advances mid-transaction,
     the whole batch aborts (nothing visible) and is recomputed against
     the winners — the same retry-by-recompute as merge_upsert_stats,
-    but all-or-nothing per attempt. Tables must exist (create them
-    with write_version first); returns {table: (rows, hwm)}.
+    but all-or-nothing per attempt. An absent table is created inside
+    the same commit; a table whose batch is empty is left unchanged.
+    Returns {table: (rows, hwm)}.
     """
     from concurrent.futures import ThreadPoolExecutor
 
@@ -334,7 +323,6 @@ def merge_upsert_atomic(
         MultiTableTransaction,
     )
     from qms_datawarehouse_spark.session import inherit_local_properties
-    from qms_datawarehouse_spark.warehouse import ConcurrentWriteError
 
     spark = warehouse.spark
     workers = max(1, min(len(batches), spark.sparkContext.defaultParallelism))
@@ -345,7 +333,6 @@ def merge_upsert_atomic(
                 table: pool.submit(
                     inherit_local_properties(spark, _merge_upsert_once),
                     warehouse, table, updates, key, order_col, n_buckets,
-                    stage=True,
                 )
                 for table, updates in sorted(batches.items())
             }

@@ -190,33 +190,24 @@ def update_rollups(
 
         def _stage(item) -> None:
             table, delta = item
-            delta = delta.withColumn(DAY_COL, F.to_date("bucket"))
-            if not warehouse.table_exists(table):
-                txn.stage_write(
-                    table, delta, partition_by=[DAY_COL], expect_base=None
-                )
-                return
             base = warehouse.current_version_name(table)
-            existing = warehouse.read(table, version=base)
-            if DAY_COL not in existing.columns:
-                # legacy unpartitioned layout: migrate via full
-                # rewrite (still inside the transaction)
-                merged = merge_partials(existing, delta).withColumn(
-                    DAY_COL, F.to_date("bucket")
-                )
-                txn.stage_write(
-                    table, merged, partition_by=[DAY_COL], expect_base=base
-                )
-                return
-            contested = existing.filter(
-                F.col(DAY_COL).isin(days)
-            ).drop(DAY_COL)
-            merged = merge_partials(
-                contested, delta.drop(DAY_COL)
-            ).withColumn(DAY_COL, F.to_date("bucket"))
+            if base is not None:
+                existing = warehouse.read(table, version=base)
+                if DAY_COL not in existing.columns:
+                    # legacy unpartitioned layout: migrate via full
+                    # rewrite (still inside the transaction)
+                    merged = merge_partials(existing, delta).withColumn(
+                        DAY_COL, F.to_date("bucket")
+                    )
+                    txn.stage_write(
+                        table, merged, partition_by=[DAY_COL], expect_base=base
+                    )
+                    return
+                contested = existing.filter(F.col(DAY_COL).isin(days))
+                delta = merge_partials(contested.drop(DAY_COL), delta)
             txn.stage_write_partial(
-                table, merged, days, partition_col=DAY_COL,
-                base_version=base,
+                table, delta.withColumn(DAY_COL, F.to_date("bucket")), days,
+                partition_col=DAY_COL, base_version=base,
             )
 
         # abort() covers STAGING failures only: commit() cleans up its

@@ -10,7 +10,10 @@ flip all the ``_CURRENT`` pointers as one atomic unit.
 
 POSIX cannot replace N files atomically, so atomicity comes from a
 WRITE-AHEAD INTENT JOURNAL + roll-forward recovery (the same protocol
-as Delta/Iceberg multi-partition commits, and databases generally):
+as Delta/Iceberg multi-partition commits, and databases generally).
+Every commit in the warehouse — one table (``write_version``,
+``merge_upsert``) or several (this class) — runs these six steps in
+``ParquetWarehouse._commit``:
 
 1. stage    — write each table's version dir (parquet + schema);
               pointers untouched; base version captured per table.
@@ -18,14 +21,15 @@ as Delta/Iceberg multi-partition commits, and databases generally):
               (total order ⇒ no deadlock between transactions).
 3. validate — CAS check: every table's current version still equals
               the captured base; any conflict aborts BEFORE anything
-              is visible (staged dirs removed).
+              is visible. Temp pointers are written under the locks.
 4. journal  — durably record {txn, table → new version} with state
               "committing" (tmp + rename + fsync). This is the commit
               point: after this instant the transaction WILL complete.
 5. repoint  — os.replace each pointer (each individually atomic).
 6. done     — journal removed; locks released; per-table GC.
 
-Crash before 4 ⇒ nothing visible; staged dirs are inert garbage
+Any failure before 4 removes the staged dirs and temp pointers; a
+process that dies before 4 leaves inert staged dirs
 (``vacuum_orphans`` removes them). Crash between 4 and 6 ⇒
 ``recover_transactions`` rolls FORWARD: any table whose pointer does
 not yet name the journaled version is repointed (idempotent), then
@@ -49,23 +53,14 @@ import uuid
 
 from pyspark.sql import DataFrame
 
-from qms_datawarehouse_spark.warehouse import (
-    ConcurrentWriteError,
-    ParquetWarehouse,
+# SimulatedCrash is re-exported: crash tests import it from here
+from qms_datawarehouse_spark.warehouse import (  # noqa: F401
+    _AT_STAGE,
+    TXN_DIR,
     VERSIONS_LOG,
+    ParquetWarehouse,
+    SimulatedCrash,
 )
-
-TXN_DIR = "_TXN"
-
-
-class SimulatedCrash(RuntimeError):
-    """Raised by the test-only crash seam in ``commit``."""
-
-
-def _txn_dir(wh: ParquetWarehouse) -> str:
-    d = os.path.join(wh.root, TXN_DIR)
-    os.makedirs(d, exist_ok=True)
-    return d
 
 
 class MultiTableTransaction:
@@ -88,14 +83,12 @@ class MultiTableTransaction:
 
     # -- staging -------------------------------------------------------
 
-    _BASE_AT_STAGE = object()  # sentinel: resolve the CAS base at stage time
-
     def stage_write(
         self,
         table: str,
         df: DataFrame,
         partition_by: list[str] | None = None,
-        expect_base=_BASE_AT_STAGE,
+        expect_base=_AT_STAGE,
     ) -> str:
         """Write ``df`` as a staged (invisible) version of ``table``.
         One staged write per table per transaction.
@@ -111,7 +104,7 @@ class MultiTableTransaction:
         self._check_stageable(table)
         base = (
             self.wh.current_version_name(table)
-            if expect_base is MultiTableTransaction._BASE_AT_STAGE
+            if expect_base is _AT_STAGE
             else expect_base
         )
         version = self.wh._stage_version(table, df, partition_by)
@@ -124,30 +117,31 @@ class MultiTableTransaction:
         df: DataFrame,
         touched: list,
         partition_col: str = "_bucket",
-        base_version: str | None = None,
+        base_version=_AT_STAGE,
     ) -> str:
         """Stage an O(touched-bucket) incremental version: write only
         the ``touched`` partition values, hardlink-inherit the rest
-        from the base (``warehouse.write_version_partial``'s staging
-        half). The transaction's CAS then protects the inherited dirs
-        exactly as the single-table partial write does — if any table's
-        base advanced, the WHOLE transaction aborts before visibility.
+        from the base (``warehouse._stage_version_partial``, whose rule
+        also stages an absent or emptied table in full). The
+        transaction's CAS then protects the inherited dirs exactly as
+        the single-table partial write does — if any table's base
+        advanced, the WHOLE transaction aborts before visibility.
 
         This is what makes cross-table transactional MERGE viable at
         100 TB: a multi-table batch touches a few dozen buckets per
         table; everything else is filesystem-metadata time."""
         self._check_stageable(table)
         version, base = self.wh._stage_version_partial(
-            table, df, touched, partition_col, base_version
+            table, df, touched, partition_col=partition_col,
+            base_version=base_version,
         )
         self.enlist(table, version, base)
         return version
 
     def enlist(self, table: str, version: str, base: str | None) -> None:
-        """Adopt a version already staged by
-        ``warehouse._stage_version_partial`` (for instance on a worker
-        thread): ``commit`` CASes it against ``base``, ``abort`` removes
-        it."""
+        """Adopt a version already staged (for instance by
+        ``merge._merge_upsert_once`` on a worker thread): ``commit``
+        CASes it against ``base``, ``abort`` removes it."""
         self._check_stageable(table)
         self.staged[table] = {"version": version, "base": base}
 
@@ -157,95 +151,39 @@ class MultiTableTransaction:
         if table in self.staged:
             raise ValueError(f"table {table!r} already staged in {self.txn_id}")
 
-    # -- journal -------------------------------------------------------
-
-    def _journal_path(self) -> str:
-        return os.path.join(_txn_dir(self.wh), f"{self.txn_id}.json")
-
-    def _write_journal(self) -> None:
-        payload = {
-            "txn_id": self.txn_id,
-            "state": "committing",
-            "committed_at": time.time(),
-            "tables": {
-                t: s["version"] for t, s in sorted(self.staged.items())
-            },
-        }
-        tmp = self._journal_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(payload, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._journal_path())
-
     # -- commit / abort ------------------------------------------------
 
     def commit(
         self, keep_versions: int = 2, _crash_after_repoints: int | None = None
     ) -> dict[str, str]:
-        """All-or-nothing pointer flip for every staged table.
-
-        ``_crash_after_repoints`` is a TEST-ONLY seam: raise
-        SimulatedCrash after that many pointer swaps, leaving the
-        journal in the committing state for recovery tests.
-        Returns {table: committed version}.
-        """
+        """All-or-nothing pointer flip for every staged table, through
+        ``ParquetWarehouse._commit``. A failure before the journal
+        removes every staged version. ``_crash_after_repoints`` is a
+        TEST-ONLY seam (see ``_commit``). Returns {table: committed
+        version}."""
         if self._done:
             raise RuntimeError("transaction already finished")
         if not self.staged:
             raise ValueError("nothing staged")
-        tables = sorted(self.staged)
-        held: list[tuple[str, str]] = []
-        try:
-            for t in tables:  # sorted ⇒ deadlock-free
-                held.append(self.wh._acquire_lock(t))
-            # CAS validation BEFORE anything becomes visible
-            for t in tables:
-                cur = self.wh.current_version_name(t)
-                if cur != self.staged[t]["base"]:
-                    raise ConcurrentWriteError(
-                        f"table {t!r}: base advanced from "
-                        f"{self.staged[t]['base']!r} to {cur!r} during the "
-                        f"transaction"
-                    )
-            self._write_journal()  # commit point
-            n = 0
-            for t in tables:
-                self.wh._repoint(t, self.staged[t]["version"])
-                n += 1
-                if (
-                    _crash_after_repoints is not None
-                    and n >= _crash_after_repoints
-                ):
-                    raise SimulatedCrash(
-                        f"crashed after {n}/{len(tables)} repoints"
-                    )
-            os.unlink(self._journal_path())
-            self._done = True
-        except ConcurrentWriteError:
-            self._cleanup_staged()
-            self._done = True
-            raise
-        finally:
-            for lock, token in held:
-                self.wh._release_lock(lock, token)
-        for t in tables:
-            self.wh._gc_versions(t, keep=keep_versions)
-        return {t: self.staged[t]["version"] for t in tables}
+        self._done = True
+        self.wh._commit(
+            {t: (s["version"], s["base"]) for t, s in self.staged.items()},
+            keep_versions,
+            self.txn_id,
+            _crash_after_repoints,
+        )
+        return {t: s["version"] for t, s in sorted(self.staged.items())}
 
     def abort(self) -> None:
         """Drop every staged version; nothing was ever visible."""
         if self._done:
             return
-        self._cleanup_staged()
-        self._done = True
-
-    def _cleanup_staged(self) -> None:
         for t, s in self.staged.items():
             shutil.rmtree(
                 os.path.join(self.wh.table_dir(t), s["version"]),
                 ignore_errors=True,
             )
+        self._done = True
 
 
 # -- recovery ----------------------------------------------------------
@@ -253,10 +191,15 @@ class MultiTableTransaction:
 
 def recover_transactions(wh: ParquetWarehouse) -> list[dict]:
     """Roll FORWARD every journaled transaction that crashed inside
-    the committing window: repoint any table whose pointer does not
+    the committing window: under all of its tables' locks (sorted, as
+    ``_commit`` takes them), repoint any table whose pointer does not
     yet name the journaled version (idempotent — already-swapped
     tables are left alone), then clear the journal. Run at warehouse
-    open or on demand. Returns the recovered journal payloads."""
+    open or on demand — also while writers are live: a journal gone
+    once the locks are held belonged to a commit that finished (its
+    committer, or another recoverer, unlinks it under the same locks),
+    and repointing for it would undo whatever committed since. Returns
+    the recovered journal payloads."""
     d = os.path.join(wh.root, TXN_DIR)
     if not os.path.isdir(d):
         return []
@@ -269,24 +212,28 @@ def recover_transactions(wh: ParquetWarehouse) -> list[dict]:
             with open(path) as f:
                 payload = json.load(f)
         except FileNotFoundError:
-            continue  # a concurrent recoverer finished this journal
+            continue  # its commit finished meanwhile
         if payload.get("state") != "committing":
             _unlink_quiet(path)
             continue
-        for t, version in sorted(payload["tables"].items()):
-            lock, token = wh._acquire_lock(t)
-            try:
-                cur = wh.current_version_name(t)
-                if cur != version:
+        held: list[tuple[str, str]] = []
+        try:
+            for t in sorted(payload["tables"]):
+                held.append(wh._acquire_lock(t))
+            if not os.path.exists(path):
+                continue
+            for t, version in sorted(payload["tables"].items()):
+                if wh.current_version_name(t) != version:
                     if not os.path.isdir(os.path.join(wh.table_dir(t), version)):
                         raise RuntimeError(
                             f"txn {payload['txn_id']}: staged version "
                             f"{version!r} of {t!r} lost — cannot roll forward"
                         )
-                    wh._repoint(t, version)
-            finally:
+                    wh._flip(t, version, wh._pointer_tmp(t, version))
+            os.unlink(path)
+        finally:
+            for lock, token in held:
                 wh._release_lock(lock, token)
-        _unlink_quiet(path)
         recovered.append(payload)
     return recovered
 

@@ -259,30 +259,24 @@ def stream_split_sync(
     """Expectations-style split sync: every micro-batch routes rows
     passing ``accept_predicate`` (a SQL boolean expression) into
     ``accept_table`` and the rest into ``quarantine_table`` — and
-    PUBLISHES BOTH ATOMICALLY via a multi-table transaction, so a
-    monitor joining accept-vs-quarantine counts never sees a batch
-    half-applied (the DLT expectations pattern, with the cross-table
-    torn-commit window closed).
+    PUBLISHES BOTH ATOMICALLY, so a monitor joining accept-vs-quarantine
+    counts never sees a batch half-applied (the DLT expectations
+    pattern, with the cross-table torn-commit window closed).
 
-    Each epoch stages the two keyed merges' RESULTS as full versions
-    inside one transaction: the merge resolution (last-write-wins
-    against current state) runs first, producing the would-be new
-    tables; the pointer flips are the joint commit. A replayed epoch
-    re-merges idempotently (T3), same as stream_sync. Offsets commit
-    only after the transaction, so a crash replays into idempotent
-    state.
-
-    Scale note: full-version staging rewrites both tables per epoch —
-    right for the audit/quarantine pattern where the quarantine side
-    is small and the accept side compacts anyway; for huge accept
-    tables prefer stream_sync per table and accept the torn window,
-    or partial-staged transactions (future work)."""
+    Each epoch is one ``merge_upsert_atomic`` call: the same
+    order-aware keyed merge as stream_sync, into ``_bucket``-partitioned
+    tables, with both tables' touched buckets staged against the
+    versions they were resolved from and flipped in one commit (an
+    absent table is created inside it). An epoch with no rows for a
+    table leaves that table unchanged. A table written unpartitioned
+    (no ``_bucket`` column — the layout of the earlier full-rewrite
+    form of this sync) is rebucketed whole by the first epoch with
+    rows for it, inside that epoch's commit. A replayed epoch
+    re-merges idempotently (T3); offsets commit only after the
+    commit, so a crash replays into idempotent state."""
     from pyspark.sql import functions as F
 
-    from qms_datawarehouse_spark.operators.merge import merge_dataframes
-    from qms_datawarehouse_spark.operators.transaction import (
-        MultiTableTransaction,
-    )
+    from qms_datawarehouse_spark.operators.merge import merge_upsert_atomic
 
     stream = (
         spark.readStream.schema(schema)
@@ -292,19 +286,15 @@ def stream_split_sync(
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         cleaned = clean_records(batch_df, source_name=source_name)
-        ok = cleaned.filter(F.expr(accept_predicate))
-        bad = cleaned.filter(~F.expr(accept_predicate))
-        txn = MultiTableTransaction(warehouse)
-        for table, part in ((accept_table, ok), (quarantine_table, bad)):
-            target = (
-                warehouse.read(table)
-                if warehouse.table_exists(table)
-                else part.limit(0)
-            )
-            txn.stage_write(
-                table,
-                merge_dataframes(target, part, key=key, order_col=cursor_col),
-            )
-        txn.commit()
+        ok = F.expr(accept_predicate)
+        merge_upsert_atomic(
+            warehouse,
+            {
+                accept_table: cleaned.filter(ok),
+                quarantine_table: cleaned.filter(~ok),
+            },
+            key=key,
+            order_col=cursor_col,
+        )
 
     return _start(stream, process_batch, checkpoint_dir, available_now=False)

@@ -10,10 +10,23 @@ story is **write-new-version-then-repoint**:
     {root}/{table}/v_{uuid}/_SCHEMA.json   (the version's full schema)
     {root}/{table}/_CURRENT                (text file naming the live one)
     {root}/{table}/_META.json              (table facts: n_buckets, key)
+    {root}/{table}/v_{uuid}/_TABLE_META.json (the facts a version creates
+                                            its table with; see _commit)
 
 ``_CURRENT`` is replaced with ``os.replace`` (atomic on POSIX), so a
 reader always resolves a fully-written version — the parity of the
 reference's transactional apply + temp-table drop (etl.py:52-87).
+
+One write path. Every writer stages an invisible version, then
+commits it through ``_commit`` — the only code that moves ``_CURRENT``
+— which locks the tables in sorted order, compare-and-swaps each base,
+writes an fsynced intent journal under ``_TXN/`` and repoints. A
+one-table ``write_version`` and a multi-table transaction
+(operators/transaction.py) are the same protocol, and
+``recover_transactions`` rolls any journaled commit forward. Keyed and
+partitioned writers stage through ``_stage_version_partial``, whose
+one rule covers the first write, an emptied table and the incremental
+case alike (see below).
 
 Scale design: data tables are hash-bucketed on the merge key into
 ``_bucket=pmod(xxhash64(key), n_buckets)`` partition directories, and
@@ -55,12 +68,16 @@ BUCKET_COL = "_bucket"
 META_FILE = "_META.json"
 SCHEMA_FILE = "_SCHEMA.json"
 VERSION_META_FILE = "_VERSION_META.json"
+TABLE_META_FILE = "_TABLE_META.json"
 VERSIONS_LOG = "_VERSIONS.jsonl"
 LOCK_FILE = "_LOCK"
+TXN_DIR = "_TXN"
 
-# sentinel: "don't check the base" (None is a real value — it means
-# "expect the table to have no committed version yet")
+# sentinels for a base version (None is a real value — it means
+# "expect the table to have no committed version yet"):
+# "don't check the base" and "the version current at staging time"
 _UNCHECKED = object()
+_AT_STAGE = object()
 
 # a commit lock older than this is presumed abandoned (writer died
 # between acquire and release) and is broken; the guarded critical
@@ -72,6 +89,11 @@ class ConcurrentWriteError(RuntimeError):
     """The table's current version advanced after this writer read its
     base — committing would silently discard the other writer's rows.
     Recompute against the new current version and retry."""
+
+
+class SimulatedCrash(RuntimeError):
+    """Raised by the test-only crash seam of ``ParquetWarehouse._commit``."""
+
 
 # P5 identifier safety (reference src/schemas/request.py:7,
 # src/api/routes.py:82-87): table names become filesystem paths, so an
@@ -203,7 +225,11 @@ class ParquetWarehouse:
         replace). Facts like ``n_buckets`` are written once at table
         creation and validated — never silently changed — by later
         merges (a different bucket count re-hashes keys to different
-        dirs and would strand stale rows in 'untouched' buckets)."""
+        dirs and would strand stale rows in 'untouched' buckets). The
+        creating writer stages them with its version
+        (``TABLE_META_FILE``) and ``_commit`` records them under the
+        table lock, so a creator that loses the race never writes
+        them."""
         tdir = self.table_dir(table)
         os.makedirs(tdir, exist_ok=True)
         path = os.path.join(tdir, META_FILE)
@@ -332,60 +358,108 @@ class ParquetWarehouse:
         except OSError:
             pass
 
-    def _swap_pointer(
+    def _commit(
         self,
-        table: str,
-        version: str,
-        keep_versions: int,
-        expect_base=_UNCHECKED,
+        staged: dict[str, tuple[str, object]],
+        keep_versions: int = 2,
+        txn_id: str | None = None,
+        _crash_after_repoints: int | None = None,
     ) -> None:
-        tmp_ptr = self._pointer_path(table) + f".tmp.{uuid.uuid4().hex[:8]}"
-        with open(tmp_ptr, "w") as f:
-            f.write(version)
-        lock, lock_token = self._acquire_lock(table)
+        """The one commit routine: every commit, of one table or
+        several, runs here, and nothing else moves ``_CURRENT``.
+        ``staged`` maps table → ``(version, base)``; ``base`` is the
+        CAS base (None: the table must not exist yet; ``_UNCHECKED``:
+        no check). Steps 2–6 of operators/transaction.py: sorted
+        locks, CAS, temp pointers written under the locks, the fsynced
+        ``_TXN/`` journal (the commit point — ``recover_transactions``
+        finishes a commit that dies after it), repoint + version log,
+        release, GC. Any failure before the journal removes the temp
+        pointers and the staged versions. A staged version carrying
+        ``TABLE_META_FILE`` (it creates its table's layout) has those
+        facts recorded by ``write_meta`` once its CAS has passed, under
+        the lock. ``_crash_after_repoints`` is
+        a test-only seam: raise ``SimulatedCrash`` after that many
+        repoints, leaving the journal for recovery."""
+        tables = sorted(staged)
+        held: list[tuple[str, str]] = []
+        tmps: list[str] = []
         try:
-            if expect_base is not _UNCHECKED:
-                cur = self.current_version_name(table)
-                if cur != expect_base:
-                    # the staged dir was never committed — remove it so
-                    # it can't be mistaken for a retained version
-                    os.unlink(tmp_ptr)
+            try:
+                for t in tables:
+                    held.append(self._acquire_lock(t))
+                for t in tables:
+                    base = staged[t][1]
+                    cur = self.current_version_name(t)
+                    if base is not _UNCHECKED and cur != base:
+                        raise ConcurrentWriteError(
+                            f"table {t!r}: base advanced from {base!r} to "
+                            f"{cur!r} during the write"
+                        )
+                for t in tables:
+                    vdir = os.path.join(self.table_dir(t), staged[t][0])
+                    facts = os.path.join(vdir, TABLE_META_FILE)
+                    if os.path.exists(facts):
+                        with open(facts) as f:
+                            self.write_meta(t, json.load(f))
+                    tmps.append(self._pointer_tmp(t, staged[t][0]))
+                journal = self._write_journal(
+                    txn_id or f"txn_{uuid.uuid4().hex[:12]}",
+                    {t: staged[t][0] for t in tables},
+                )
+            except BaseException:
+                for path in tmps:
+                    os.unlink(path)
+                for t in tables:
                     shutil.rmtree(
-                        os.path.join(self.table_dir(table), version),
+                        os.path.join(self.table_dir(t), staged[t][0]),
                         ignore_errors=True,
                     )
-                    raise ConcurrentWriteError(
-                        f"table {table!r}: base advanced from "
-                        f"{expect_base!r} to {cur!r} during the write"
-                    )
-            os.replace(tmp_ptr, self._pointer_path(table))  # atomic repoint
-            self._append_version_log(table, version)
+                raise
+            for n, (t, tmp) in enumerate(zip(tables, tmps), 1):
+                self._flip(t, staged[t][0], tmp)
+                if _crash_after_repoints is not None and n >= _crash_after_repoints:
+                    raise SimulatedCrash(f"crashed after {n}/{len(tables)} repoints")
+            os.unlink(journal)
         finally:
-            self._release_lock(lock, lock_token)
-        self._gc_versions(table, keep=keep_versions)
+            for lock, token in held:
+                self._release_lock(lock, token)
+        for t in tables:
+            self._gc_versions(t, keep=keep_versions)
 
-    def _append_version_log(self, table: str, version: str) -> None:
-        # version log gives time travel a commit ORDER (dir names
+    def _pointer_tmp(self, table: str, version: str) -> str:
+        tmp = self._pointer_path(table) + f".tmp.{uuid.uuid4().hex[:8]}"
+        with open(tmp, "w") as f:
+            f.write(version)
+        return tmp
+
+    def _write_journal(self, txn_id: str, tables: dict[str, str]) -> str:
+        txn_dir = os.path.join(self.root, TXN_DIR)
+        os.makedirs(txn_dir, exist_ok=True)
+        path = os.path.join(txn_dir, f"{txn_id}.json")
+        payload = {
+            "txn_id": txn_id,
+            "state": "committing",
+            "committed_at": time.time(),
+            "tables": tables,
+        }
+        with open(path + ".tmp", "w") as f:
+            json.dump(payload, f)
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(path + ".tmp", path)
+        return path
+
+    def _flip(self, table: str, version: str, tmp: str) -> None:
+        """Rename the temp pointer ``tmp`` over ``_CURRENT`` (atomic on
+        POSIX) and log the version. The caller holds the table lock;
+        this is the only writer of ``_CURRENT``."""
+        os.replace(tmp, self._pointer_path(table))
+        # the version log gives time travel a commit ORDER (dir names
         # are uuids); appended under the table lock and after the
         # swap, so entries are totally ordered and each was live once
-        with open(
-            os.path.join(self.table_dir(table), VERSIONS_LOG), "a"
-        ) as f:
-            f.write(
-                json.dumps(
-                    {"version": version, "committed_at": time.time()}
-                )
-                + "\n"
-            )
-
-    def _repoint(self, table: str, version: str) -> None:
-        """Pointer swap + log append WITHOUT taking the table lock —
-        caller (multi-table transaction commit) already holds it."""
-        tmp_ptr = self._pointer_path(table) + f".tmp.{uuid.uuid4().hex[:8]}"
-        with open(tmp_ptr, "w") as f:
-            f.write(version)
-        os.replace(tmp_ptr, self._pointer_path(table))
-        self._append_version_log(table, version)
+        entry = {"version": version, "committed_at": time.time()}
+        with open(os.path.join(self.table_dir(table), VERSIONS_LOG), "a") as f:
+            f.write(json.dumps(entry) + "\n")
 
     # -- time travel ---------------------------------------------------
 
@@ -458,7 +532,7 @@ class ParquetWarehouse:
         version = self._stage_version(
             table, df, partition_by, cluster=cluster, extra_meta=extra_meta
         )
-        self._swap_pointer(table, version, keep_versions, expect_base)
+        self._commit({table: (version, expect_base)}, keep_versions)
         return os.path.join(self.table_dir(table), version)
 
     def _stage_version(
@@ -468,9 +542,12 @@ class ParquetWarehouse:
         partition_by: list[str] | None = None,
         cluster: bool = True,
         extra_meta: dict | None = None,
+        table_meta: dict | None = None,
     ) -> str:
         """``write_version`` without the pointer swap: returns the
-        staged version's name for the caller's own commit."""
+        staged version's name for the caller's own commit.
+        ``table_meta`` stages the facts this version creates its table
+        with (recorded by ``_commit``)."""
         version, vdir = self._new_version_dir(table)
         if isinstance(df, pa.Table):
             os.makedirs(vdir)
@@ -494,6 +571,9 @@ class ParquetWarehouse:
         self._write_schema_file(vdir, schema)
         if extra_meta is not None:
             self._write_version_meta(vdir, extra_meta)
+        if table_meta is not None:
+            with open(os.path.join(vdir, TABLE_META_FILE), "w") as f:
+                json.dump(table_meta, f)
         return version
 
     @staticmethod
@@ -573,13 +653,13 @@ class ParquetWarehouse:
         touched: list,
         partition_col: str = BUCKET_COL,
         keep_versions: int = 2,
-        base_version: str | None = None,
+        base_version=_AT_STAGE,
         cluster: bool = True,
         extra_meta: dict | None = None,
     ) -> str:
         """Incremental version: write ONLY the ``touched`` partition
         values of ``partition_col`` from ``df``; inherit every other
-        partition dir from the current version by hardlinking its
+        partition dir from the base version by hardlinking its
         immutable parquet files (same inode — no data read or copied).
 
         This is what keeps a keyed merge O(touched-bucket bytes) at
@@ -590,7 +670,9 @@ class ParquetWarehouse:
         version only unlinks names, never shared inodes.
 
         ``df`` must contain exactly the rows belonging to the touched
-        partitions (the caller's contested-bucket resolution).
+        partitions (the caller's contested-bucket resolution). Staging
+        follows ``_stage_version_partial``'s rule, so an absent or
+        emptied table gets a full version of ``df``.
 
         The commit is ALWAYS a compare-and-swap on the version whose
         partitions it inherits: if another writer commits in between,
@@ -599,22 +681,19 @@ class ParquetWarehouse:
         tells the caller to recompute from the new current version.
 
         ``base_version`` pins WHICH version is inherited and CASed
-        against: read-modify-write callers MUST pass the version they
-        read (merge.py does). Without it, prev resolves to current at
-        THIS call — a writer committing between the caller's read and
-        this call would advance current, this write would inherit the
-        newer version's untouched buckets, and the CAS would pass
-        while the caller's resolution of the TOUCHED buckets silently
-        dropped that writer's rows (the lost-update TOCTOU).
+        against (None: the table must not exist yet): read-modify-write
+        callers MUST pass the version they read (merge.py does). By
+        default prev resolves to current at THIS call — a writer
+        committing between the caller's read and this call would
+        advance current, this write would inherit the newer version's
+        untouched buckets, and the CAS would pass while the caller's
+        resolution of the TOUCHED buckets silently dropped that
+        writer's rows (the lost-update TOCTOU).
         """
         version, base = self._stage_version_partial(
-            table, df, touched, partition_col, base_version, cluster=cluster
+            table, df, touched, partition_col, base_version, cluster, extra_meta
         )
-        if extra_meta is not None:
-            self._write_version_meta(
-                os.path.join(self.table_dir(table), version), extra_meta
-            )
-        self._swap_pointer(table, version, keep_versions, expect_base=base)
+        self._commit({table: (version, base)}, keep_versions)
         return os.path.join(self.table_dir(table), version)
 
     def _stage_version_partial(
@@ -623,15 +702,32 @@ class ParquetWarehouse:
         df: DataFrame,
         touched: list,
         partition_col: str = BUCKET_COL,
-        base_version: str | None = None,
+        base_version=_AT_STAGE,
         cluster: bool = True,
-    ) -> tuple[str, str]:
-        """The staging half of ``write_version_partial`` — write the
-        touched partitions, hardlink-inherit the rest, write the
-        merged schema — WITHOUT the pointer swap. Returns
-        ``(version, base_version_name)`` for the caller's own CAS
-        commit (multi-table transactions stage several of these and
-        flip all pointers together)."""
+        extra_meta: dict | None = None,
+        table_meta: dict | None = None,
+    ) -> tuple[str, str | None]:
+        """The one staging rule for keyed and partitioned writers:
+        write ``df`` partitioned by ``partition_col`` as an invisible
+        version and return ``(version, base)`` for ``_commit``. The
+        base version's directory listing (no Spark job) decides what
+        else the version holds:
+
+        - no committed base, or a base holding no parquet file (an
+          emptied table: a zero-row partitioned write leaves only
+          ``_SUCCESS``) — nothing: ``df`` is the whole content;
+        - data but no ``partition_col=`` dirs — ``ValueError``:
+          inheriting nothing would drop every untouched row;
+        - otherwise every untouched partition dir, hardlinked.
+
+        A base's lineage meta (unless ``extra_meta`` is given) and its
+        schema carry over: inherited files may lack new columns, and
+        ``read`` null-fills them from the merged ``_SCHEMA.json``.
+        ``table_meta`` (the table's facts, e.g. ``n_buckets``) is staged
+        only when the version creates the table."""
+        if base_version is _AT_STAGE:
+            base_version = self.current_version_name(table)
+        prev = None
         if base_version is not None:
             prev = os.path.join(self.table_dir(table), base_version)
             if not os.path.isdir(prev):
@@ -641,13 +737,9 @@ class ParquetWarehouse:
                     f"longer available (current is {cur!r}) — recompute "
                     "against the current version and retry"
                 )
-        else:
-            prev = self.current_version_dir(table)
-        if prev is None:
-            raise FileNotFoundError(f"partial write needs an existing table: {table}")
-        if not any(
-            e.startswith(f"{partition_col}=") for e in os.listdir(prev)
-        ):
+        prefix = f"{partition_col}="
+        parts = [e for e in os.listdir(prev) if e.startswith(prefix)] if prev else []
+        if not parts and prev and self.has_data(table, base_version):
             # loud failure beats silent loss: inheriting from a version
             # with no matching partition dirs would drop every
             # untouched row (e.g. after a layout-stripping rewrite)
@@ -656,25 +748,20 @@ class ParquetWarehouse:
                 f"{partition_col}= partition dirs; partial write would "
                 f"lose untouched data — write a full version instead"
             )
-        version, vdir = self._new_version_dir(table)
-        # same clustering as write_version's partitioned branch: the
-        # touched-bucket rows are one bounded exchange, and each
-        # rewritten dir lands as ~one file instead of one per task.
         # cluster=False for callers (compact's fragmented branch) that
         # already sized and sorted their partitions — re-shuffling
-        # here would undo their sortWithinPartitions clustering.
-        if cluster:
-            df = df.repartition(partition_col)
-        df.write.mode("overwrite").partitionBy(partition_col).parquet(vdir)
-
-        touched_dirs = {f"{partition_col}={v}" for v in touched}
-        for entry in os.listdir(prev):
-            if not entry.startswith(f"{partition_col}="):
-                continue
-            if entry in touched_dirs:
-                continue
+        # would undo their sortWithinPartitions clustering
+        version = self._stage_version(
+            table, df, [partition_col], cluster=cluster, extra_meta=extra_meta,
+            table_meta=table_meta if prev is None else None,
+        )
+        if prev is None:
+            return version, None
+        vdir = os.path.join(self.table_dir(table), version)
+        touched_dirs = {f"{prefix}{v}" for v in touched}
+        for entry in parts:
             src = os.path.join(prev, entry)
-            if not os.path.isdir(src):
+            if entry in touched_dirs or not os.path.isdir(src):
                 continue
             dst = os.path.join(vdir, entry)
             os.makedirs(dst, exist_ok=True)
@@ -687,25 +774,17 @@ class ParquetWarehouse:
                 # mid-inherit — same stale-base condition as the CAS
                 shutil.rmtree(vdir, ignore_errors=True)
                 raise ConcurrentWriteError(
-                    f"table {table!r}: base version {os.path.basename(prev)!r}"
+                    f"table {table!r}: base version {base_version!r}"
                     " was garbage-collected during the partial write"
                 ) from exc
 
-        # lineage inherits with the content: a partial write that does
-        # not state its own extra_meta keeps the previous version's
-        # _VERSION_META.json (write_version_partial overwrites it
-        # afterwards when extra_meta IS given). Without this, any
+        # lineage inherits with the content: without this, any
         # content-preserving maintenance rewrite of an MV — compact()
         # most of all — silently dropped the reflected-base record and
         # the next refresh crashed instead of staying incremental.
         prev_meta = os.path.join(prev, VERSION_META_FILE)
-        if os.path.exists(prev_meta):
-            shutil.copyfile(
-                prev_meta, os.path.join(vdir, VERSION_META_FILE)
-            )
-
-        # evolved schema = previous version's schema ∪ the batch's —
-        # inherited files may lack new columns; read() null-fills them.
+        if extra_meta is None and os.path.exists(prev_meta):
+            shutil.copyfile(prev_meta, os.path.join(vdir, VERSION_META_FILE))
         prev_schema_path = os.path.join(prev, SCHEMA_FILE)
         if os.path.exists(prev_schema_path):
             with open(prev_schema_path) as f:
@@ -713,7 +792,15 @@ class ParquetWarehouse:
         else:
             prev_schema = self.spark.read.parquet(prev).schema
         self._write_schema_file(vdir, _merge_schemas(prev_schema, df.schema))
-        return version, os.path.basename(prev)
+        return version, base_version
+
+    def has_data(self, table: str, version: str) -> bool:
+        """Whether ``version`` of ``table`` holds rows: a parquet file
+        or a ``col=value`` partition dir at its top level (Spark writes
+        no dir for an empty partition). One ``os.listdir``, no Spark
+        job."""
+        vdir = os.path.join(self.table_dir(table), version)
+        return any(e.endswith(".parquet") or "=" in e for e in os.listdir(vdir))
 
     def _gc_versions(self, table: str, keep: int) -> None:
         tdir = self.table_dir(table)

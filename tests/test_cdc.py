@@ -288,7 +288,7 @@ def test_apply_changes_retries_after_interleaved_commit(spark, warehouse):
         n_buckets=4,
     )
 
-    real_partial = ParquetWarehouse.write_version_partial
+    real_partial = ParquetWarehouse._stage_version_partial
     fired = {"n": 0}
 
     def racing_partial(self, table, df, touched, **kw):
@@ -308,7 +308,7 @@ def test_apply_changes_retries_after_interleaved_commit(spark, warehouse):
         return real_partial(self, table, df, touched, **kw)
 
     with mock.patch.object(
-        ParquetWarehouse, "write_version_partial", racing_partial
+        ParquetWarehouse, "_stage_version_partial", racing_partial
     ):
         stats = apply_changes(
             warehouse, "t", _ch(spark, [("a", 5, "upsert", "a5")]),

@@ -52,7 +52,7 @@ def test_merge_retries_and_converges_after_conflict(spark, warehouse):
     merge_upsert(warehouse, "t", _df(spark, [("a", 1, TS), ("b", 1, TS)]),
                  n_buckets=4)
 
-    real_partial = ParquetWarehouse.write_version_partial
+    real_partial = ParquetWarehouse._stage_version_partial
     fired = {"n": 0}
 
     def racing_partial(self, table, df, touched, **kw):
@@ -69,7 +69,7 @@ def test_merge_retries_and_converges_after_conflict(spark, warehouse):
     # merge writer updates 'a'; the interposed commit updates 'b'
     import unittest.mock as mock
 
-    with mock.patch.object(ParquetWarehouse, "write_version_partial",
+    with mock.patch.object(ParquetWarehouse, "_stage_version_partial",
                            racing_partial):
         n = merge_upsert(
             warehouse, "t", _df(spark, [("a", 5, TS2)]), n_buckets=4
@@ -85,20 +85,23 @@ def test_create_race_does_not_clobber(spark, warehouse):
     """Two writers both observe 'table absent'; the loser's CAS fails
     and its retry merges into the winner's table."""
     real_write = ParquetWarehouse.write_version
+    real_stage = ParquetWarehouse._stage_version_partial
     fired = {"n": 0}
 
-    def racing_create(self, table, df, partition_by=None, **kw):
-        if fired["n"] == 0 and kw.get("expect_base", "x") is None:
+    def racing_create(self, table, df, touched, **kw):
+        if fired["n"] == 0 and kw.get("base_version", "x") is None:
             fired["n"] += 1
             other = with_bucket(_df(spark, [("z", 1, TS)]), "_id", 4)
             real_write(self, table, other, partition_by=[BUCKET_COL])
             self.write_meta(table, {"n_buckets": 4, "key": "_id",
                                     "order_col": "updated_at"})
-        return real_write(self, table, df, partition_by=partition_by, **kw)
+        return real_stage(self, table, df, touched, **kw)
 
     import unittest.mock as mock
 
-    with mock.patch.object(ParquetWarehouse, "write_version", racing_create):
+    with mock.patch.object(
+        ParquetWarehouse, "_stage_version_partial", racing_create
+    ):
         merge_upsert(warehouse, "t", _df(spark, [("a", 1, TS)]), n_buckets=4)
     assert fired["n"] == 1
     out = {r._id: r.v for r in warehouse.read("t").collect()}
@@ -194,7 +197,7 @@ def test_merge_same_bucket_interleave_not_lost(spark, warehouse):
     and the retry re-resolves over the winner's version."""
     merge_upsert(warehouse, "t1b", _df(spark, [("a", 1, TS)]), n_buckets=1)
 
-    real_partial = ParquetWarehouse.write_version_partial
+    real_partial = ParquetWarehouse._stage_version_partial
     fired = {"n": 0}
 
     def racing_partial(self, table, df, touched, **kw):
@@ -212,7 +215,7 @@ def test_merge_same_bucket_interleave_not_lost(spark, warehouse):
     import unittest.mock as mock
 
     with mock.patch.object(
-        ParquetWarehouse, "write_version_partial", racing_partial
+        ParquetWarehouse, "_stage_version_partial", racing_partial
     ):
         merge_upsert(warehouse, "t1b", _df(spark, [("a", 5, TS2)]),
                      n_buckets=1)
@@ -289,7 +292,7 @@ def test_persist_not_leaked_across_conflict_retries(spark, warehouse):
 
     before = spark.sparkContext._jsc.getPersistentRDDs().size()
     with mock.patch.object(
-        ParquetWarehouse, "write_version_partial", always_conflict
+        ParquetWarehouse, "_stage_version_partial", always_conflict
     ):
         with pytest.raises(ConcurrentWriteError):
             merge_upsert_stats(
@@ -298,3 +301,28 @@ def test_persist_not_leaked_across_conflict_retries(spark, warehouse):
             )
     after = spark.sparkContext._jsc.getPersistentRDDs().size()
     assert after == before
+
+
+def test_create_race_keeps_winner_bucket_count(spark, warehouse):
+    """Two creators race with different bucket counts: the loser fails
+    its CAS before its table facts are recorded, so the table keeps the
+    winner's bucket count and the loser's retry refuses the mismatch
+    instead of merging into buckets hashed another way."""
+    import unittest.mock as mock
+
+    real = ParquetWarehouse.current_version_name
+    fired = []
+
+    def racing(self, table):
+        out = real(self, table)
+        if table == "t" and not fired:
+            fired.append(table)  # a default-bucketed creator wins
+            merge_upsert(self, "t", _df(spark, [("z", 1, TS)]))
+        return out
+
+    with mock.patch.object(ParquetWarehouse, "current_version_name", racing):
+        with pytest.raises(ValueError, match="n_buckets=32"):
+            merge_upsert(warehouse, "t", _df(spark, [("a", 1, TS)]), n_buckets=4)
+    assert fired == ["t"]
+    assert warehouse.read_meta("t")["n_buckets"] == 32
+    assert {r._id for r in warehouse.read("t").collect()} == {"z"}

@@ -181,18 +181,18 @@ def test_semantic_first_batch_corpus_failure_leaves_no_tables(spark, warehouse):
     """The first batch stages the centroids and the corpus together: a
     corpus staging failure leaves neither table (nor a staged centroid
     version)."""
-    stage_write = MultiTableTransaction.stage_write
+    stage_write_partial = MultiTableTransaction.stage_write_partial
 
     def stage(self, table, *args, **kwargs):
         if table == sg.CORPUS_TABLE:
             raise RuntimeError("corpus staging failed")
-        return stage_write(self, table, *args, **kwargs)
+        return stage_write_partial(self, table, *args, **kwargs)
 
     batch = spark.createDataFrame(
         [(i, v) for i, v in enumerate(_VECTORS)],
         "vec_id long, embedding array<double>",
     )
-    with mock.patch.object(MultiTableTransaction, "stage_write", stage):
+    with mock.patch.object(MultiTableTransaction, "stage_write_partial", stage):
         with pytest.raises(RuntimeError, match="corpus staging failed"):
             sg.ingest_semantic(warehouse, batch)
     assert not warehouse.table_exists(sg.CENTROID_TABLE)

@@ -207,7 +207,7 @@ def test_refresh_result_shape():
 
 # ---------------------------------------------------------------------
 # Round 11: broadcast-semi dim probe (no driver round-trip for the
-# changed-key set), zero-row-MV fallback, and single-swap lineage.
+# changed-key set), zero-row MVs, and single-swap lineage.
 # ---------------------------------------------------------------------
 
 
@@ -271,11 +271,12 @@ def test_dim_diff_reads_each_snapshot_once(spark, warehouse):
     )
 
 
-def test_zero_row_mv_incremental_falls_back_to_full(spark, warehouse):
+def test_zero_row_mv_refreshes_incrementally(spark, warehouse):
     """A join MV whose create-time join produced ZERO rows has no
-    partition dirs to inherit; the first real refresh must take the
-    documented full-recompute fallback, not die in
-    write_version_partial's loud no-partition-dirs guard."""
+    partition dirs to inherit; its touched rows are its whole content,
+    so the first real refresh stays incremental (the staging rule
+    writes a full version) instead of dying in write_version_partial's
+    loud no-partition-dirs guard."""
     facts = spark.range(50).select(
         F.col("id").cast("string").alias("_id"),
         (F.col("id") % 10 + 1000).alias("cust_id"),  # no dim match
@@ -306,7 +307,7 @@ def test_zero_row_mv_incremental_falls_back_to_full(spark, warehouse):
     )
     merge_upsert(warehouse, "facts", batch, n_buckets=N_BUCKETS)
     res = refresh_join_matview(warehouse, "mv")
-    assert res.mode == "full"
+    assert res.mode == "incremental"
     assert _mv_rows(warehouse) == _expected(warehouse)
     assert warehouse.read("mv").count() == 5
 

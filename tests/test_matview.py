@@ -278,7 +278,7 @@ def test_crash_before_swap_leaves_old_consistent_pair(spark, warehouse):
     import pytest
 
     with mock.patch.object(
-        ParquetWarehouse, "_swap_pointer",
+        ParquetWarehouse, "_commit",
         side_effect=RuntimeError("injected crash"),
     ):
         with pytest.raises(RuntimeError, match="injected crash"):

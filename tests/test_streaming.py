@@ -464,3 +464,103 @@ def test_stream_split_sync_atomic_quarantine(spark, warehouse, stream_dirs):
     # both tables committed through transactions: journal dir is clean
     snap = snapshot_versions(warehouse, ["ev_ok", "ev_bad"], timeout=1.0)
     assert set(snap) == {"ev_ok", "ev_bad"}
+
+
+def test_stream_split_sync_keeps_rival_commit(spark, warehouse, stream_dirs):
+    """A rival commit to the accept table, landing right after the
+    epoch read that table, survives the epoch: the epoch stages against
+    the version it read, so its commit fails the CAS and the retry
+    merges over the rival's row instead of rewriting it away."""
+    from unittest import mock
+
+    from qms_datawarehouse_spark.operators.merge import with_bucket
+    from qms_datawarehouse_spark.streaming.sync import stream_split_sync
+    from qms_datawarehouse_spark.warehouse import ParquetWarehouse
+
+    src, ckpt = stream_dirs
+    t = dt.datetime(2024, 1, 1, 10, 0, 0)
+    _events_df(spark, [(1, t, 100, "click", 1.0, None)]).write.parquet(f"{src}/b1")
+    real_read = ParquetWarehouse.read
+    fired = []
+
+    def racing_read(self, table, *args, **kwargs):
+        df = real_read(self, table, *args, **kwargs)
+        if table == "ev_ok" and not fired:
+            fired.append(table)
+            rival = df.filter("event_id = 1").withColumn(
+                "event_id", F.lit(99).cast("long")
+            )
+            part = self.partition_column(table)
+            if part:  # route the rival row to its key's bucket
+                rival = with_bucket(
+                    rival, "event_id", self.read_meta(table)["n_buckets"]
+                )
+            self.write_version(
+                table, df.unionByName(rival),
+                partition_by=[part] if part else None,
+            )
+        return df
+
+    q = stream_split_sync(
+        spark, f"{src}/*", warehouse, "ev_ok", "ev_bad",
+        accept_predicate="value >= 0", checkpoint_dir=ckpt,
+    )
+    try:
+        q.processAllAvailable()
+        _events_df(
+            spark, [(2, t + dt.timedelta(hours=1), 101, "view", 2.0, None)]
+        ).write.parquet(f"{src}/b2")
+        with mock.patch.object(ParquetWarehouse, "read", racing_read):
+            q.processAllAvailable()
+    finally:
+        q.stop()
+
+    assert fired == ["ev_ok"]
+    assert {r["event_id"] for r in warehouse.read("ev_ok").collect()} == {1, 2, 99}
+
+
+def test_stream_split_sync_rebuckets_unbucketed_tables(spark, warehouse, stream_dirs):
+    """Split tables written unpartitioned (no ``_bucket`` column, no
+    table meta — the layout stream_split_sync wrote before it merged
+    by key) keep syncing: an epoch rebuckets each table it touches
+    whole, inside its commit, and later epochs merge incrementally."""
+    from qms_datawarehouse_spark.operators.merge import DEFAULT_BUCKETS
+    from qms_datawarehouse_spark.streaming.sync import stream_split_sync
+    from qms_datawarehouse_spark.transform import clean_records
+
+    src, ckpt = stream_dirs
+    t = dt.datetime(2024, 1, 1, 10, 0, 0)
+    later = t + dt.timedelta(hours=1)
+    for table, rows in (
+        ("ev_ok", [(1, t, 100, "click", 1.0, None), (3, t, 102, "click", 2.0, None)]),
+        ("ev_bad", [(2, t, 101, "view", -5.0, None)]),
+    ):
+        warehouse.write_version(
+            table, clean_records(_events_df(spark, rows), source_name="stream")
+        )
+        assert warehouse.partition_column(table) is None
+    _events_df(
+        spark,
+        [(1, later, 100, "view", 7.0, None), (4, later, 103, "click", -1.0, None)],
+    ).write.parquet(f"{src}/b1")
+
+    q = stream_split_sync(
+        spark, f"{src}/*", warehouse, "ev_ok", "ev_bad",
+        accept_predicate="value >= 0", checkpoint_dir=ckpt,
+    )
+    try:
+        q.processAllAvailable()
+        for table in ("ev_ok", "ev_bad"):
+            assert warehouse.partition_column(table) == "_bucket"
+            assert warehouse.read_meta(table)["n_buckets"] == DEFAULT_BUCKETS
+        _events_df(spark, [(5, later, 104, "click", 3.0, None)]).write.parquet(
+            f"{src}/b2"
+        )
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+    ok = {r["event_id"]: r["event_type"] for r in warehouse.read("ev_ok").collect()}
+    assert ok == {1: "view", 3: "click", 5: "click"}
+    assert warehouse.read("ev_ok").count() == 3
+    assert sorted(r["event_id"] for r in warehouse.read("ev_bad").collect()) == [2, 4]

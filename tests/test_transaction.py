@@ -187,6 +187,48 @@ def test_concurrent_recoverers_converge(spark, warehouse):
     assert len(warehouse.list_versions("b")) <= 3
 
 
+def test_recovery_skips_journal_of_finished_commit(spark, warehouse):
+    """recover_transactions reads a live commit's journal, then waits
+    for the table lock while that commit finishes and a second commit
+    lands: the second commit stays current instead of being repointed
+    back to the first."""
+    import threading
+    from unittest import mock
+
+    from qms_datawarehouse_spark.warehouse import ParquetWarehouse
+
+    warehouse.write_version("a", _df(spark, 1, "v0"))
+    real_acquire = ParquetWarehouse._acquire_lock
+    real_flip = ParquetWarehouse._flip
+    waiting, second_done = threading.Event(), threading.Event()
+    state: dict = {}
+
+    def acquire(self, table, *args, **kwargs):
+        if threading.current_thread().name == "recoverer":
+            waiting.set()  # the journal is read; hold off the lock
+            second_done.wait(10)
+        return real_acquire(self, table, *args, **kwargs)
+
+    def recover():
+        state["recovered"] = recover_transactions(warehouse)
+
+    def flip(self, table, version, tmp):
+        if "thread" not in state:  # the first commit, mid-flip
+            state["thread"] = threading.Thread(target=recover, name="recoverer")
+            state["thread"].start()
+            assert waiting.wait(10)
+        real_flip(self, table, version, tmp)
+
+    with mock.patch.object(ParquetWarehouse, "_acquire_lock", acquire), \
+            mock.patch.object(ParquetWarehouse, "_flip", flip):
+        warehouse.write_version("a", _df(spark, 2, "v1"))
+        warehouse.write_version("a", _df(spark, 3, "v2"))
+        second_done.set()
+        state["thread"].join(10)
+    assert state["recovered"] == []
+    assert warehouse.read("a").count() == 3
+
+
 def _bucketed_df(spark, ids, tag):
     return spark.createDataFrame(
         [(i, tag, i % 4) for i in ids], "k long, tag string, _bucket int"
@@ -413,8 +455,13 @@ def test_sync_collections_atomic_staging_failure_aborts_every_table(
     marks = checkpoint.get_marks(warehouse, "prod")
     assert marks == {"tix": t1, "usr": t1}
 
-    frames = {t: _tagged(spark, [2], "v2", t2) for t in (*seed, "zz_absent")}
-    with pytest.raises(ValueError, match="requires existing table"):
+    from pyspark.errors import AnalysisException
+
+    frames = {t: _tagged(spark, [2], "v2", t2) for t in seed}
+    # a staging failure that fires before anything is written: the
+    # merge key is missing from the frame
+    frames["zz_absent"] = _tagged(spark, [2], "v2", t2).drop("_id")
+    with pytest.raises(AnalysisException, match="_id"):
         sync_collections_atomic(warehouse, frames, "prod")
 
     assert {t: warehouse.current_version_name(t) for t in seed} == pointers

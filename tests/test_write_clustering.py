@@ -206,7 +206,7 @@ def test_version_meta_crash_before_swap_is_invisible(spark, warehouse):
     from qms_datawarehouse_spark.warehouse import ParquetWarehouse
 
     with mock.patch.object(
-        ParquetWarehouse, "_swap_pointer", side_effect=RuntimeError("crash")
+        ParquetWarehouse, "_commit", side_effect=RuntimeError("crash")
     ):
         with pytest.raises(RuntimeError, match="crash"):
             warehouse.write_version("c", df, extra_meta={"epoch": 2})
