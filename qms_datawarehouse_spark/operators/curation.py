@@ -34,6 +34,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from qms_datawarehouse_spark.plans.registry import query, tables
+from qms_datawarehouse_spark.session import spread
 
 # --------------------------------------------------------------------
 # Shared: deterministic uniform hash in [0, 10000) from a key column.
@@ -1218,8 +1219,6 @@ def curation_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     float is ln on identical integer ratios, summed per-doc and
     rounded to 4 decimals (the bigram_lm_score precedent — per-term
     ulp drift ~1e-16, far below the rounding grain)."""
-    from qms_datawarehouse_spark.plans.registry import spread
-
     (documents,) = tables(spark, sf_dir, "documents")
     # single-file corpus reads as ONE partition; the bigram zip +
     # explode below is the expensive map-side term

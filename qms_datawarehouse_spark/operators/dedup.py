@@ -53,11 +53,9 @@ _SHINGLE_CTE = """
 # a process whose first-ever import is operators.dedup (a focused
 # test selecting one gate test, a REPL) finds them on the partially
 # initialized module instead of dying in the cycle.
-from qms_datawarehouse_spark.plans.registry import REGISTRY, query, spread, tables
+from qms_datawarehouse_spark.plans.registry import REGISTRY, query, tables
 from qms_datawarehouse_spark.planaudit import checkpoint_result
-
-
-_spread = spread  # CPU-bound stages need input parallelism, see registry
+from qms_datawarehouse_spark.session import spread
 
 
 def _shingled(documents: DataFrame) -> DataFrame:
@@ -74,7 +72,7 @@ def _shingled(documents: DataFrame) -> DataFrame:
     """
     from pyspark.ml.feature import NGram
 
-    documents = _spread(documents)
+    documents = spread(documents)
     base = documents.select(
         "doc_id", F.split(F.lower(F.col("text")), " ", -1).alias("w")
     )
@@ -397,7 +395,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     blocking (pigeonhole: hamming ≤ 3 over 4 bands ⇒ one band
     identical) turns all-pairs hamming into a bucket join."""
     (documents,) = tables(spark, sf_dir, "documents")
-    words = _spread(documents).select(
+    words = spread(documents).select(
         "doc_id",
         F.explode(
             F.array_distinct(F.split(F.lower(F.col("text")), " ", -1))
@@ -1898,9 +1896,9 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     (documents,) = tables(spark, sf_dir, "documents")
     k = _SPAN_K
-    # _spread: the md5-per-gram generation below is the expensive
+    # spread: the md5-per-gram generation below is the expensive
     # term and a single-file corpus reads as ONE partition
-    t = _spread(documents).select(
+    t = spread(documents).select(
         "doc_id", F.split("text", " ", -1).alias("w")
     )
     g = t.select(

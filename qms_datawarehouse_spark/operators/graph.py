@@ -32,7 +32,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from qms_datawarehouse_spark.planaudit import checkpoint_result
 from qms_datawarehouse_spark.plans.registry import query, tables
+from qms_datawarehouse_spark.session import spread
 
 _MASS = 10**12  # total integer rank mass
 
@@ -168,8 +170,6 @@ def graph_pagerank_2iter(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("rank_mass"), "node")
         .limit(20)
     )
-    from qms_datawarehouse_spark.planaudit import checkpoint_result
-
     return checkpoint_result(
         "graph_pagerank_2iter", out, edges, deg, nodes, edges_deg
     )
@@ -314,7 +314,6 @@ def graph_triangles_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from qms_datawarehouse_spark.operators.lsh_planes import (
         plane_spark_literal,
     )
-    from qms_datawarehouse_spark.plans.registry import spread
 
     (emb,) = tables(spark, sf_dir, "embeddings")
     # integer bucket width (named distinctly from the wedge frame
@@ -444,8 +443,6 @@ def graph_triangles_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("n_triangles"), "node")
         .limit(20)
     )
-    from qms_datawarehouse_spark.planaudit import checkpoint_result
-
     return checkpoint_result(
         "graph_triangles_lsh", out, deg, tri, per_node
     )

@@ -61,13 +61,17 @@ O(changed buckets) to keep current.
 
 from __future__ import annotations
 
+import os
+import shutil
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from qms_datawarehouse_spark.operators.changes import changed_partitions
-from qms_datawarehouse_spark.plans.registry import query
+from qms_datawarehouse_spark.planaudit import record
+from qms_datawarehouse_spark.plans.registry import query, tables
+from qms_datawarehouse_spark.session import inherit_local_properties
 from qms_datawarehouse_spark.warehouse import (
     BUCKET_COL,
     ConcurrentWriteError,
@@ -210,13 +214,9 @@ def _changed_dim_keys(
         .select(dim_key)
         .distinct()
     )
-    # plan capture (the dim_probe convention): one scan per snapshot,
-    # one aggregate exchange — pinned by tests/test_join_matview.py
-    from qms_datawarehouse_spark.planaudit import PRE_CHECKPOINT_PLANS
-
-    PRE_CHECKPOINT_PLANS["join_matview:dim_diff"] = (
-        keys._jdf.queryExecution().executedPlan().toString()
-    )
+    # one scan per snapshot, one aggregate exchange — pinned by
+    # tests/test_join_matview.py
+    record("join_matview:dim_diff", keys)
     return keys
 
 
@@ -240,8 +240,6 @@ def refresh_join_matview(
     exceeds ``max_dim_keys`` (at that batch size the semi-joined
     fact scan stops being cheaper than the rewrite) — the fallback is
     always correct."""
-    import os
-
     meta = warehouse.read_meta(name)
     fact_table, dim_table = meta["jmv_fact"], meta["jmv_dim"]
     dim_key = meta["jmv_dim_key"]
@@ -341,15 +339,9 @@ def refresh_join_matview(
                 .select(BUCKET_COL)
                 .distinct()
             )
-            # plan capture (planaudit convention): the broadcast-semi
-            # probe shape is pinned by tests/test_join_matview.py
-            from qms_datawarehouse_spark.planaudit import (
-                PRE_CHECKPOINT_PLANS,
-            )
-
-            PRE_CHECKPOINT_PLANS["join_matview:dim_probe"] = (
-                probe._jdf.queryExecution().executedPlan().toString()
-            )
+            # the broadcast-semi probe shape is pinned by
+            # tests/test_join_matview.py
+            record("join_matview:dim_probe", probe)
             touched.update(int(r[0]) for r in probe.collect())
         finally:
             keys.unpersist()
@@ -408,8 +400,6 @@ def refresh_join_matview(
 
 
 def _n_buckets(warehouse: ParquetWarehouse, name: str) -> int:
-    import os
-
     vdir = warehouse.current_version_dir(name)
     if vdir is None:
         return 0
@@ -479,11 +469,7 @@ def join_matview_incremental_replay(spark, sf_dir: str) -> DataFrame:
 
     Reference analog: routes.py recomputes report joins per request;
     this row is the O(changed-buckets) derived-table upgrade."""
-    import os
-    import shutil
-
     from qms_datawarehouse_spark.operators.merge import merge_upsert
-    from qms_datawarehouse_spark.plans.registry import tables
     from qms_datawarehouse_spark.tmputil import pid_scoped_dir
 
     (orders, customer) = tables(spark, sf_dir, "orders", "customer")
@@ -521,8 +507,6 @@ def join_matview_incremental_replay(spark, sf_dir: str) -> DataFrame:
     # own table. Each task inherits the caller's Spark local properties
     # (job group, description).
     from concurrent.futures import ThreadPoolExecutor
-
-    from qms_datawarehouse_spark.session import inherit_local_properties
 
     batch1 = base.filter(F.col("m3") != 0).drop("m3", "m5")
     with ThreadPoolExecutor(max_workers=2) as pool:

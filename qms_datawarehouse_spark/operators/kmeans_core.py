@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from qms_datawarehouse_spark.session import spread
+
 _KM_K = 8  # clusters; seeds = vec_id < K (deterministic init)
 
 # SemDeDup's own scaling regime: K grows with the corpus so clusters
@@ -36,23 +38,6 @@ def km_scaled_k(n: int) -> int:
 # 1600 * ||a||^2 * ||b||^2 (tau^2 * 10^4). Shared so every semantic
 # operator agrees on what "semantic near-dup" means.
 _SEM_T2 = 1600
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """registry.spread via a DEFERRED in-function import (the module
-    must stay an import-graph leaf, and a module-level registry import
-    would re-enter the package's circular-import window — but by the
-    time any query CALLS this, the package is fully initialized; the
-    same idiom other operators already use). One definition, no drift:
-    a single-file embedding fixture reads as ONE partition, which made
-    every downstream CPU-bound stage — Lloyd assignment folds, the
-    SemDeDup pair dot products, k-center distance scans — run on ONE
-    core (measured: dedup_semantic spent 2×2.9 s in single-task
-    stages). A multi-file corpus at scale already has ≥ parallelism
-    partitions and skips the shuffle entirely."""
-    from qms_datawarehouse_spark.plans.registry import spread
-
-    return spread(df)
 
 
 def _km_quantized(emb: DataFrame, keep_w: bool = False) -> DataFrame:
@@ -77,7 +62,11 @@ def _km_quantized(emb: DataFrame, keep_w: bool = False) -> DataFrame:
     map-side projection — callers needing both (the semantic gate's
     member frame) previously re-derived ``w`` separately and paid a
     corpus-wide vec_id join to re-attach it."""
-    emb = _spread(emb)
+    # a single-file embedding fixture reads as ONE partition, which ran
+    # every downstream CPU-bound stage (Lloyd folds, SemDeDup pair dot
+    # products, k-center scans) on one core (measured: dedup_semantic
+    # spent 2×2.9 s in single-task stages)
+    emb = spread(emb)
     cols = [
         F.col("vec_id"),
         F.expr(
@@ -156,7 +145,7 @@ def _cos_quantized(emb: DataFrame) -> DataFrame:
     invariant — and none is needed: dot products and squared norms
     involve no integer division, and floor itself (round toward -inf)
     is identical in both engines on identical doubles."""
-    emb = _spread(emb)
+    emb = spread(emb)
     return emb.select(
         "vec_id",
         F.expr(

@@ -66,7 +66,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from qms_datawarehouse_spark.operators.changes import changed_partitions
-from qms_datawarehouse_spark.plans.registry import query
+from qms_datawarehouse_spark.plans.registry import query, tables
 from qms_datawarehouse_spark.warehouse import (
     BUCKET_COL,
     ConcurrentWriteError,
@@ -454,7 +454,6 @@ def matview_incremental_replay(spark, sf_dir: str) -> DataFrame:
     import shutil
 
     from qms_datawarehouse_spark.operators.merge import merge_upsert
-    from qms_datawarehouse_spark.plans.registry import tables
 
     (events,) = tables(spark, sf_dir, "events")
     # pid in the path (the rmtree + rebuild would race a concurrent
@@ -551,7 +550,6 @@ def matview_bucketed_replay(spark, sf_dir: str) -> DataFrame:
     import shutil
 
     from qms_datawarehouse_spark.operators.merge import merge_upsert
-    from qms_datawarehouse_spark.plans.registry import tables
     from qms_datawarehouse_spark.tmputil import pid_scoped_dir
 
     (events,) = tables(spark, sf_dir, "events")
@@ -669,7 +667,6 @@ def matview_null_sum_replay(spark, sf_dir: str) -> DataFrame:
     import shutil
 
     from qms_datawarehouse_spark.operators.merge import merge_upsert
-    from qms_datawarehouse_spark.plans.registry import tables
     from qms_datawarehouse_spark.tmputil import pid_scoped_dir
 
     (events,) = tables(spark, sf_dir, "events")

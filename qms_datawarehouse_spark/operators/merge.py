@@ -48,6 +48,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from qms_datawarehouse_spark.session import inherit_local_properties
 from qms_datawarehouse_spark.warehouse import (
     BUCKET_COL,
     ConcurrentWriteError,
@@ -322,7 +323,6 @@ def merge_upsert_atomic(
     from qms_datawarehouse_spark.operators.transaction import (
         MultiTableTransaction,
     )
-    from qms_datawarehouse_spark.session import inherit_local_properties
 
     spark = warehouse.spark
     workers = max(1, min(len(batches), spark.sparkContext.defaultParallelism))

@@ -28,7 +28,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from qms_datawarehouse_spark.planaudit import checkpoint_result
 from qms_datawarehouse_spark.plans.registry import query, tables
+from qms_datawarehouse_spark.session import spread
 
 FEATURE_SCHEMA = (
     "doc_id long, format string, n_bytes long, checksum string, "
@@ -91,12 +93,12 @@ extract_features = extract_features_with(fake_decode)
 
 
 def with_binary_content(
-    documents: DataFrame, spread: bool = True
+    documents: DataFrame, spread_rows: bool = True
 ) -> DataFrame:
     """Model the corpus as multimodal rows: text bytes stand in for an
     opaque media payload + typed metadata columns.
 
-    Spread to cluster parallelism first (registry.spread): every
+    Spread to cluster parallelism first (``session.spread``): every
     decode stage in this module (mapInPandas dHash/audio-fp/feature
     kernels) consumes this frame, and a single-file corpus reads as
     ONE partition — which ran the whole Python decode pass on one
@@ -104,15 +106,13 @@ def with_binary_content(
     single-task stages). A multi-file corpus at scale already has
     ≥ parallelism partitions and skips the shuffle.
 
-    ``spread=False`` opts a consumer out: the two feature-extraction
-    rows run exactly ONE cheap kernel pass, and the round-14 A/B
-    measured the spread's round-robin exchange costing more than the
-    parallelism saved there (multimodal_features_arrow 0.30 → 0.52 s)
-    while every multi-pass consumer (dHash/audio-fp/cross-modal)
-    kept it a win."""
-    from qms_datawarehouse_spark.plans.registry import spread as _spread
-
-    src = _spread(documents) if spread else documents
+    ``spread_rows=False`` opts a consumer out: the two
+    feature-extraction rows run exactly ONE cheap kernel pass, and the
+    round-14 A/B measured the spread's round-robin exchange costing
+    more than the parallelism saved there (multimodal_features_arrow
+    0.30 → 0.52 s) while every multi-pass consumer
+    (dHash/audio-fp/cross-modal) kept it a win."""
+    src = spread(documents) if spread_rows else documents
     return src.select(
         "doc_id",
         F.encode(F.col("text"), "UTF-8").alias("content"),
@@ -149,7 +149,7 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter (pushed before decode) → Arrow-batched stub decode →
     typed feature rows."""
     (documents,) = tables(spark, sf_dir, "documents")
-    blobs = with_binary_content(documents, spread=False)  # one cheap pass
+    blobs = with_binary_content(documents, spread_rows=False)  # one cheap pass
     # metadata-only predicate BEFORE the decode stage
     blobs = blobs.filter(F.length("content") > 0)
     return blobs.mapInPandas(extract_features, schema=FEATURE_SCHEMA)
@@ -369,7 +369,7 @@ def multimodal_features_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     (image codecs, audio resamplers): it skips the pandas round-trip
     entirely."""
     (documents,) = tables(spark, sf_dir, "documents")
-    blobs = with_binary_content(documents, spread=False).filter(
+    blobs = with_binary_content(documents, spread_rows=False).filter(
         F.length("content") > 0
     )  # one cheap pass — see with_binary_content's spread note
     return blobs.mapInArrow(extract_features_arrow, schema=FEATURE_SCHEMA)
@@ -638,8 +638,6 @@ def dedup_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_a", "doc_b", "hamming")
         .orderBy("doc_a", "doc_b")
     )
-    from qms_datawarehouse_spark.planaudit import checkpoint_result
-
     res = checkpoint_result("dedup_image_phash", out, ph)
     # evidence guard (same contract as the top-k row): the fixture
     # carries real near-dup structure at every sf — an EMPTY pair set
@@ -757,8 +755,6 @@ def similarity_image_phash_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("hamming", "doc_id")
         .limit(_PHASH_TOPK)
     )
-    from qms_datawarehouse_spark.planaudit import checkpoint_result
-
     return checkpoint_result("similarity_image_phash_topk", out, ph)
 
 
@@ -980,8 +976,6 @@ def dedup_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_a", "doc_b", "hamming")
         .orderBy("doc_a", "doc_b")
     )
-    from qms_datawarehouse_spark.planaudit import checkpoint_result
-
     res = checkpoint_result("dedup_audio_fingerprint", out, fp)
     # evidence guard (family contract): the fixture carries real
     # near-dup structure at every sf — an empty pair set would be a
@@ -1096,8 +1090,6 @@ def similarity_audio_fp_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("hamming", "doc_id")
         .limit(_AUDIO_FP_TOPK)
     )
-    from qms_datawarehouse_spark.planaudit import checkpoint_result
-
     return checkpoint_result("similarity_audio_fp_topk", out, fp)
 
 
@@ -1282,8 +1274,6 @@ def dedup_cross_modal_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("doc_a", "doc_b")
     )
-    from qms_datawarehouse_spark.planaudit import checkpoint_result
-
     res = checkpoint_result("dedup_cross_modal_agreement", out, sh, ph)
     # evidence guard as a ONE-ROW aggregate (never a full collect —
     # the pair set is small at test sf but corpus-dependent at scale)
@@ -1488,6 +1478,4 @@ def phash_gate_replay_two_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("epoch")
     )
-    from qms_datawarehouse_spark.planaudit import checkpoint_result
-
     return checkpoint_result("phash_gate_replay_two_epochs", out, ver, ph)

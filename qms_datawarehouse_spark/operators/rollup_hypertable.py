@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from qms_datawarehouse_spark.plans.registry import query, tables
+from qms_datawarehouse_spark.session import inherit_local_properties
 from qms_datawarehouse_spark.warehouse import ParquetWarehouse
 
 PARTIALS = ("n", "value_sum", "value_min", "value_max")
@@ -164,7 +165,6 @@ def update_rollups(
     from qms_datawarehouse_spark.operators.transaction import (
         MultiTableTransaction,
     )
-    from qms_datawarehouse_spark.session import inherit_local_properties
 
     delta_1h = aggregate_to_bucket(delta_events, "1 hour").persist()
     try:
@@ -399,7 +399,6 @@ def rollup_incremental_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    from qms_datawarehouse_spark.plans.registry import tables
     from qms_datawarehouse_spark.tmputil import pid_scoped_dir
 
     (events,) = tables(spark, sf_dir, "events")

@@ -52,6 +52,7 @@ from qms_datawarehouse_spark.operators.incremental_dedup import (
     GateResult,
     admit,
 )
+from qms_datawarehouse_spark.planaudit import checkpoint_result
 from qms_datawarehouse_spark.plans.registry import query, tables
 
 CORPUS_TABLE = "semantic_corpus"
@@ -420,8 +421,6 @@ def semantic_gate_replay_two_epochs(
         )
         .orderBy("cell")
     )
-    from qms_datawarehouse_spark.planaudit import checkpoint_result
-
     return checkpoint_result(
         "semantic_gate_replay_two_epochs", out, q1, mem, dup, st1
     )

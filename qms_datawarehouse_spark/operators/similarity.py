@@ -44,6 +44,7 @@ from qms_datawarehouse_spark.operators.kmeans_core import (  # noqa: F401
     _km_quantized,
     km_scaled_k,
 )
+from qms_datawarehouse_spark.planaudit import checkpoint_result
 from qms_datawarehouse_spark.plans.registry import query, tables
 
 
@@ -1556,8 +1557,6 @@ def _semdedup_from_assignment(
         .orderBy("cluster_id")
     )
     # K rows: eager-checkpoint the result, then drop both caches
-    from qms_datawarehouse_spark.planaudit import checkpoint_result
-
     return checkpoint_result(name, out, q, mem)
 
 

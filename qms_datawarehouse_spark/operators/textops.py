@@ -21,7 +21,9 @@ from qms_datawarehouse_spark.operators.hashsplit import (
     _sql_hash_u32,
     hash_u32,
 )
+from qms_datawarehouse_spark.planaudit import checkpoint_result
 from qms_datawarehouse_spark.plans.registry import query, tables
+from qms_datawarehouse_spark.session import spread
 
 STOPWORDS = ("the", "a", "of", "and", "in", "to", "is")
 
@@ -1228,8 +1230,6 @@ def text_tokenize_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc reassembly is one doc-keyed agg whose sort is
     within-group by position. OOV ratio in exact integer basis
     points."""
-    from qms_datawarehouse_spark.plans.registry import spread
-
     (documents,) = tables(spark, sf_dir, "documents")
     # single-file corpus reads as ONE partition; the tokenize +
     # posexplode pass feeds both the word-frequency shuffle and the
@@ -1472,8 +1472,6 @@ def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference capability analog: none (the reference stores raw text;
     this is the LLM-pipeline layer mandated by SURVEY §2.12)."""
-    from qms_datawarehouse_spark.plans.registry import spread
-
     (documents,) = tables(spark, sf_dir, "documents")
     # single-file corpus reads as ONE partition; the tokenize +
     # posexplode pass feeds both the word-frequency shuffle and the
@@ -1550,8 +1548,6 @@ def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # per-doc rows only: eager-checkpoint (plan recorded for the
     # sweep), then drop the word-frequency cache
-    from qms_datawarehouse_spark.planaudit import checkpoint_result
-
     return checkpoint_result("text_bpe_encode", out, wf)
 
 
@@ -1660,8 +1656,6 @@ def similarity_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded full-outer join. The document and embedding id domains
     are aligned in the fixture (doc_id ≡ vec_id), standing in for a
     corpus with per-document embeddings."""
-    from pyspark.sql import Window
-
     from qms_datawarehouse_spark.operators.similarity import (
         similarity_topk_cosine,
     )

@@ -26,10 +26,15 @@ Scale shape:
 
 from __future__ import annotations
 
+import os
+import shutil
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from qms_datawarehouse_spark.plans.registry import query
+from qms_datawarehouse_spark.planaudit import record
+from qms_datawarehouse_spark.plans.registry import query, tables
+from qms_datawarehouse_spark.session import spread
 
 
 def _rank_code(col: Column, cuts: list[float], bits: int) -> Column:
@@ -114,7 +119,6 @@ def zorder_write(
     cols: list[str],
     n_files: int = 64,
     bits: int = 8,
-    mode: str = "overwrite",
     cuts: list | None = None,
 ) -> None:
     """Write ``df`` as (up to) ``n_files`` flat parquet files laid out
@@ -133,12 +137,8 @@ def zorder_write(
     moved (filesystem metadata only) into ``path`` flat — two slices
     hash-colliding into one task still land in separate files, and the
     footer-stats contract (one narrow slice per file) holds exactly.
+    Whatever was at ``path`` is replaced.
     """
-    import os
-    import shutil
-
-    from qms_datawarehouse_spark.plans.registry import spread
-
     # single-file sources read as ONE partition: the percentile pass
     # and the rank-code projection would run on one core, and the
     # clustering shuffle that follows pays for the spread anyway
@@ -155,17 +155,12 @@ def zorder_write(
         .sortWithinPartitions("_zf", "_z")
         .drop("_z")
     )
-    # plan capture (planaudit convention): ONE hash exchange on the
-    # slice id — the old rangepartitioning exchange carried a
-    # boundary-sampling pre-pass over the full rank-code projection
-    from qms_datawarehouse_spark.planaudit import PRE_CHECKPOINT_PLANS
-
-    PRE_CHECKPOINT_PLANS["zorder_write"] = (
-        staged._jdf.queryExecution().executedPlan().toString()
-    )
+    # ONE hash exchange on the slice id — the old rangepartitioning
+    # exchange carried a boundary-sampling pre-pass over the full
+    # rank-code projection
+    record("zorder_write", staged)
     staged.write.mode("overwrite").partitionBy("_zf").parquet(staging)
-    if mode == "overwrite":
-        shutil.rmtree(path, ignore_errors=True)
+    shutil.rmtree(path, ignore_errors=True)
     os.makedirs(path, exist_ok=True)
     try:
         for entry in sorted(os.listdir(staging)):
@@ -249,15 +244,10 @@ def zorder_routed_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     like the bloom/fileskip rows); manifest I/O is footer-only; the
     data read opens only multi-predicate-surviving files. At 100 TB
     this is the Delta/Iceberg Z-ORDER read path on plain parquet."""
-    import os
-
-    from qms_datawarehouse_spark.plans.registry import tables
     from qms_datawarehouse_spark.sources.fileskip import (
         file_manifest_df,
         prune_files_df_multi,
     )
-
-    from qms_datawarehouse_spark.plans.registry import spread
 
     (events,) = tables(spark, sf_dir, "events")
     events = spread(events)  # single-file source: one-partition scan

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from qms_datawarehouse_spark.planaudit import checkpoint_result
 from qms_datawarehouse_spark.plans.registry import query, tables
 from qms_datawarehouse_spark.operators.hashsplit import (  # noqa: E402
     _sql_hash_u32,
@@ -2314,8 +2315,6 @@ def sketch_kmv_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.col("n_inter"))
         .alias("inter_kmv"),
     )
-    from qms_datawarehouse_spark.planaudit import checkpoint_result
-
     return checkpoint_result("sketch_kmv_setops", out, u)
 
 

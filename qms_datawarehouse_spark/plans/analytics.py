@@ -25,7 +25,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from qms_datawarehouse_spark.functions.scalars import duration_m_s, sorted_set_str
+from qms_datawarehouse_spark.planaudit import checkpoint_result
 from qms_datawarehouse_spark.plans.registry import query, tables
+from qms_datawarehouse_spark.session import spread
 from qms_datawarehouse_spark.operators.hashsplit import _sql_hash_u32  # noqa: E402
 
 # Shared CTE fragments for the DuckDB oracles -------------------------
@@ -1668,8 +1670,6 @@ def rfm_segments_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = seg.groupBy("r_q", "f_q", "m_q").agg(
         F.count("*").cast("long").alias("n_customers")
     )
-    from qms_datawarehouse_spark.planaudit import checkpoint_result
-
     return checkpoint_result("rfm_segments_approx", out, a)
 
 
@@ -1913,8 +1913,6 @@ def stats_bootstrap_poisson(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one scan, a 32× map-side fan-out collapsed by
     partial aggregation before the 32-group exchange — at 100 TB the
     wire cost is 32 rows per task, never 32× the data."""
-    from qms_datawarehouse_spark.plans.registry import spread
-
     (orders,) = tables(spark, sf_dir, "orders")
     # spread: the 32x md5 fan-out is CPU-bound — a single-file input
     # would otherwise run it on one core (measured 2x slower at sf0.1

@@ -152,29 +152,3 @@ def events_delta(spark: SparkSession, sf_dir: str, ts_gt: str | None = None):
         cut_lit = F.lit(dt.datetime.fromisoformat(ts_gt)).cast("timestamp_ntz")
         df = df.filter(F.col("ts") > cut_lit)
     return df.withColumn("ts", F.col("ts").cast("timestamp"))
-
-
-def spread(df):
-    """Repartition up to cluster parallelism when the source arrived in
-    fewer partitions (single small parquet file → one partition → any
-    CPU-bound per-row stage runs on ONE core). Moves only the raw rows
-    and only when needed; a multi-file corpus at scale already has
-    ≥ parallelism partitions and skips the shuffle entirely.
-    """
-    target = df.sparkSession.sparkContext.defaultParallelism
-    # Fast path: split packing charges each file openCostInBytes (4 MB
-    # default) against maxPartitionBytes (128 MB default), so a split
-    # holds at most ~32 files — a source backed by >= 32*target files
-    # therefore has >= target scan partitions without probing. This
-    # skips the `.rdd` probe below, which forces a full analyzed-plan
-    # -> RDD translation per call — cheap on a raw scan but a real
-    # cost (and an AQE bypass hazard) if a caller ever hands in a
-    # derived frame. At 100 TB any fact table clears this bound.
-    try:
-        if len(df.inputFiles()) >= 32 * target:
-            return df
-    except Exception:
-        pass  # non-file source — fall through to the physical probe
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df

@@ -6,6 +6,10 @@ timestamp to UTC on both read and write
 compares naive-UTC values. AQE is on so skewed joins/aggregations
 re-plan at runtime — the 100 TB posture is "declare the plan, let the
 optimizer adapt".
+
+``spread`` (input parallelism for CPU-bound stages) lives here because
+this module imports only os and pyspark: any operator module can
+import it at module top, inside the package's circular-import window.
 """
 
 from __future__ import annotations
@@ -13,7 +17,7 @@ from __future__ import annotations
 import os
 from typing import Callable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.util import inheritable_thread_target
 
 _TUNING = {
@@ -87,3 +91,31 @@ def inherit_local_properties(spark: SparkSession, fn: Callable) -> Callable:
         return fn(*args, **kwargs)
 
     return run
+
+
+def spread(df: DataFrame) -> DataFrame:
+    """Repartition up to cluster parallelism when the source arrived in
+    fewer partitions (single small parquet file → one partition → any
+    CPU-bound per-row stage runs on ONE core). Moves only the raw rows
+    and only when needed; a multi-file corpus at scale already has
+    ≥ parallelism partitions and skips the shuffle entirely.
+    """
+    target = df.sparkSession.sparkContext.defaultParallelism
+    # Fast path: FilePartition.maxSplitBytes caps a split at
+    # bytesPerCore = (bytes + files*openCost) / defaultParallelism, so
+    # N >= target uniform files pack into >= target*N/(N+target) splits
+    # whatever maxPartitionBytes/openCostInBytes say — a source of
+    # >= 32*target files scans as ~target partitions already (>= 97%),
+    # and the x32 margin absorbs uneven file sizes. This skips the
+    # `.rdd` probe below, which forces a full analyzed-plan -> RDD
+    # translation per call — cheap on a raw scan but a real cost (and
+    # an AQE bypass hazard) if a caller ever hands in a derived frame.
+    # At 100 TB any fact table clears this bound.
+    try:
+        if len(df.inputFiles()) >= 32 * target:
+            return df
+    except Exception:
+        pass  # non-file source — fall through to the physical probe
+    if df.rdd.getNumPartitions() < target:
+        return df.repartition(target)
+    return df

@@ -32,7 +32,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from qms_datawarehouse_spark.plans.registry import query
+from qms_datawarehouse_spark.plans.registry import query, tables
 
 
 def build_file_manifest(path: str, cols: list[str]) -> list[dict]:
@@ -411,8 +411,6 @@ def fileskip_routed_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     read survivors — the Delta/Iceberg read path on plain parquet."""
 
     from pyspark.sql import functions as F
-
-    from qms_datawarehouse_spark.plans.registry import tables
 
     (orders,) = tables(spark, sf_dir, "orders")
     row = orders.agg(

@@ -134,8 +134,6 @@ def register_views(spark: SparkSession, sf_dir: str, prefix: str = "") -> list[s
     raw SQL (PostgreSQL); this is the equivalent front door here.
     Views are lazy: registration reads only parquet footers.
     """
-    import os
-
     from qms_datawarehouse_spark.plans.registry import tables as _load
 
     names = [

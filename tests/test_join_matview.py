@@ -8,6 +8,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from qms_datawarehouse_spark import planaudit
 from qms_datawarehouse_spark.operators.join_matview import (
     JoinRefreshResult,
     create_join_matview,
@@ -216,19 +217,17 @@ def test_dim_probe_is_broadcast_semi_join_column_pruned(spark, warehouse):
     broadcast left-semi probe over ONLY (dim_key, bucket) — never as
     driver-collected literals (the 10k-literal predicate cliff), and
     never widening the scan to full rows."""
-    from qms_datawarehouse_spark.planaudit import PRE_CHECKPOINT_PLANS
-
     _seed(spark, warehouse)
     moved = spark.createDataFrame(
         [("13", 13, 77, "2024-02-01")],
         "`_id` string, cust_id long, segment long, updated_at string",
     ).withColumn("updated_at", F.col("updated_at").cast("timestamp"))
     merge_upsert(warehouse, "dims", moved, n_buckets=N_BUCKETS)
-    PRE_CHECKPOINT_PLANS.pop("join_matview:dim_probe", None)
-    res = refresh_join_matview(warehouse, "mv")
+    with planaudit.capture() as plans:
+        res = refresh_join_matview(warehouse, "mv")
     assert res.mode == "incremental"
 
-    plan = PRE_CHECKPOINT_PLANS["join_matview:dim_probe"]
+    plan = plans["join_matview:dim_probe"]
     assert "BroadcastHashJoin" in plan and "LeftSemi" in plan
     assert "BroadcastNestedLoopJoin" not in plan
     # column pruning: the fact side appears as a scan reading exactly
@@ -251,19 +250,17 @@ def test_dim_diff_reads_each_snapshot_once(spark, warehouse):
     one aggregate — not the two-exceptAll shape, which scanned each
     snapshot twice and shuffled twice (Spark lowers exceptAll through
     Generate replicaterows; its absence pins the shape)."""
-    from qms_datawarehouse_spark.planaudit import PRE_CHECKPOINT_PLANS
-
     _seed(spark, warehouse)
     moved = spark.createDataFrame(
         [("13", 13, 77, "2024-02-01")],
         "`_id` string, cust_id long, segment long, updated_at string",
     ).withColumn("updated_at", F.col("updated_at").cast("timestamp"))
     merge_upsert(warehouse, "dims", moved, n_buckets=N_BUCKETS)
-    PRE_CHECKPOINT_PLANS.pop("join_matview:dim_diff", None)
-    res = refresh_join_matview(warehouse, "mv")
+    with planaudit.capture() as plans:
+        res = refresh_join_matview(warehouse, "mv")
     assert res.mode == "incremental"
 
-    plan = PRE_CHECKPOINT_PLANS["join_matview:dim_diff"]
+    plan = plans["join_matview:dim_diff"]
     assert "replicaterows" not in plan, "exceptAll shape is back"
     scans = [ln for ln in plan.splitlines() if "FileScan" in ln]
     assert len(scans) == 2, (

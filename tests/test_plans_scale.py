@@ -3,27 +3,44 @@
 pinned here against ``.explain``-style plan text, so a refactor that
 silently loses a PushedFilter or turns a broadcast join into a
 nested-loop fails CI — correctness tests alone would not catch it.
+
+The registry-wide sweeps read one module-scoped build of every row's
+plan, which also feeds the PLAN_SHAPES.json ratchet.
 """
 
 from __future__ import annotations
 
+import json
+import os
+
 import pytest
 
+from qms_datawarehouse_spark import planaudit
 from qms_datawarehouse_spark.plans.registry import REGISTRY
 
 from conftest import SF_DIR
 
+LEDGER = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLAN_SHAPES.json"
+)
+
 
 def _plan(spark, name: str) -> str:
-    from qms_datawarehouse_spark.planaudit import PRE_CHECKPOINT_PLANS
-
-    df = REGISTRY[name].fn(spark, SF_DIR)
     # eager-checkpoint queries return a Scan ExistingRDD (which would
-    # pass every structural assertion vacuously) — prefer the real
-    # plan checkpoint_result recorded during construction
-    return PRE_CHECKPOINT_PLANS.get(
-        name, df._jdf.queryExecution().executedPlan().toString()
-    )
+    # pass every structural assertion vacuously) — row_plans keeps the
+    # real plan checkpoint_result recorded during construction
+    plans = planaudit.row_plans(name, lambda: REGISTRY[name].fn(spark, SF_DIR))
+    return plans[name]
+
+
+@pytest.fixture(scope="module")
+def registry_plans(spark) -> dict[str, str]:
+    """Every registry row's plan (``name``) and side captures
+    (``name/side``), each row built once for the whole module."""
+    plans: dict[str, str] = {}
+    for name, qd in REGISTRY.items():
+        plans.update(planaudit.row_plans(name, lambda: qd.fn(spark, SF_DIR)))
+    return plans
 
 
 def test_point_lookup_pushes_both_predicates(spark):
@@ -65,7 +82,7 @@ def test_flagship_single_fact_shuffle(spark):
     assert plan.count("lineitem.parquet") == 1
 
 
-def test_no_cartesian_products_anywhere(spark):
+def test_no_cartesian_products_anywhere(registry_plans):
     """Only the explicitly-documented brute-force baselines may build
     all-pairs; everything else must stay equi-join shaped."""
     allowed = {
@@ -75,14 +92,76 @@ def test_no_cartesian_products_anywhere(spark):
         "similarity_ivf_probe",  # 1-row broadcast codebook + query
         "ivf_index_incremental_replay",  # same broadcast-codebook assign
     }
-    for name, qd in REGISTRY.items():
+    for name in REGISTRY:
         if name in allowed:
             continue
-        try:
-            plan = _plan(spark, name)
-        except Exception:  # streaming-only entries can't explain in batch
-            continue
-        assert "CartesianProduct" not in plan, name
+        assert "CartesianProduct" not in registry_plans[name], name
+
+
+def test_plan_shapes_do_not_grow(registry_plans):
+    """PLAN_SHAPES.json is a ratchet over every row's plan shape
+    (``planaudit.shape``: exchanges by partitioning, broadcasts, file
+    scans, joins by strategy, Python/Arrow evals): a count above its
+    ledger entry fails by row and key; a ``null`` entry (the count
+    differs between 2 and 4 cores) is skipped. A shrinking count is
+    locked in, and a new or removed row recorded, by regenerating:
+    ``python tools/plan_shapes.py``."""
+    with open(LEDGER) as f:
+        ledger = json.load(f)
+    assert set(ledger) == set(registry_plans), {
+        "not in ledger": sorted(set(registry_plans) - set(ledger)),
+        "not in registry": sorted(set(ledger) - set(registry_plans)),
+    }
+    grown = {}
+    for row, plan in registry_plans.items():
+        for key, n in planaudit.shape(plan).items():
+            cap = ledger[row][key]
+            if cap is not None and n > cap:
+                grown[f"{row} {key}"] = f"{cap} -> {n}"
+    assert not grown, grown
+
+
+def test_plan_capture_is_opt_in(spark, warehouse):
+    """Outside ``planaudit.capture()`` a checkpointed row keeps no plan
+    text anywhere in planaudit and still unpersists its caches (only
+    the eager checkpoint's own RDD stays persisted); inside it, the
+    row's plan and a join-MV refresh's side plans are recorded."""
+    from pyspark.sql import functions as F
+
+    from qms_datawarehouse_spark.operators.join_matview import (
+        refresh_join_matview,
+    )
+    from qms_datawarehouse_spark.operators.merge import merge_upsert
+
+    from test_join_matview import N_BUCKETS, _seed
+
+    def persistent_rdds():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    before = persistent_rdds()
+    out = REGISTRY["dedup_minhash_lsh"].fn(spark, SF_DIR)  # noqa: F841
+    # out (held, so the context cleaner cannot drop it) keeps its
+    # eager checkpoint persisted; sh and bl are gone
+    assert len(persistent_rdds() - before) == 1
+    held = [
+        k for k, v in vars(planaudit).items()
+        if not k.startswith("__") and "isFinalPlan" in repr(v)
+    ]
+    assert held == [], f"planaudit keeps plan text in {held}"
+
+    with planaudit.capture() as plans:
+        REGISTRY["dedup_minhash_lsh"].fn(spark, SF_DIR)
+    assert "isFinalPlan" in plans["dedup_minhash_lsh"]
+
+    _seed(spark, warehouse)
+    moved = spark.createDataFrame(
+        [("13", 13, 77, "2024-02-01")],
+        "`_id` string, cust_id long, segment long, updated_at string",
+    ).withColumn("updated_at", F.col("updated_at").cast("timestamp"))
+    merge_upsert(warehouse, "dims", moved, n_buckets=N_BUCKETS)
+    with planaudit.capture() as plans:
+        assert refresh_join_matview(warehouse, "mv").mode == "incremental"
+    assert {"join_matview:dim_diff", "join_matview:dim_probe"} <= set(plans)
 
 
 def test_minhash_has_no_explode_before_signatures(spark):
@@ -337,7 +416,7 @@ def test_runtime_bloom_filter_prunes_fact_scan(spark):
                 spark.conf.set(k, v)
 
 
-def test_no_unintended_cartesian_anywhere(spark):
+def test_no_unintended_cartesian_anywhere(registry_plans):
     """Global plan invariant over the ENTIRE registry: no query plans
     a CartesianProduct or BroadcastNestedLoopJoin except the
     explicitly-bounded cases (1-row scalar broadcasts, the K-row IVF
@@ -421,8 +500,8 @@ def test_no_unintended_cartesian_anywhere(spark):
         "dq_freshness_sla",
     }
     offenders = {}
-    for name, qd in REGISTRY.items():
-        plan = _plan(spark, name)
+    for name in REGISTRY:
+        plan = registry_plans[name]
         bad = [
             kind
             for kind in ("CartesianProduct", "BroadcastNestedLoopJoin")
@@ -531,7 +610,7 @@ def _global_window_nodes(plan: str) -> list[str]:
     return hits
 
 
-def test_no_unbounded_global_window_anywhere(spark):
+def test_no_unbounded_global_window_anywhere(registry_plans):
     """Global plan invariant over the ENTIRE registry: no query may
     run a Window with an empty partition spec over unbounded input —
     the single-task sort that killed dedup_semantic_scaled's seed
@@ -576,7 +655,7 @@ def test_no_unbounded_global_window_anywhere(spark):
     rank_fns = ("row_number()", "rank(", "dense_rank(")
     offenders = {}
     for name in REGISTRY:
-        plan = _plan(spark, name)
+        plan = registry_plans[name]
         nodes = _global_window_nodes(plan)
         if not nodes:
             continue

@@ -299,16 +299,17 @@ def test_seed_cut_is_take_ordered_not_global_window(spark):
     weak."""
     from test_plans_scale import _global_window_nodes
 
-    from qms_datawarehouse_spark.planaudit import PRE_CHECKPOINT_PLANS
+    from qms_datawarehouse_spark import planaudit
     from qms_datawarehouse_spark.plans.registry import REGISTRY
 
-    REGISTRY["dedup_semantic_scaled"].fn(spark, SF_DIR)
-    plan = PRE_CHECKPOINT_PLANS["dedup_semantic_scaled"]
+    with planaudit.capture() as plans:
+        REGISTRY["dedup_semantic_scaled"].fn(spark, SF_DIR)
+        REGISTRY["sketch_kmv_setops"].fn(spark, SF_DIR)
+    plan = plans["dedup_semantic_scaled"]
     assert "TakeOrdered" in plan
     assert _global_window_nodes(plan) == []
 
-    REGISTRY["sketch_kmv_setops"].fn(spark, SF_DIR)
-    kmv = PRE_CHECKPOINT_PLANS["sketch_kmv_setops"]
+    kmv = plans["sketch_kmv_setops"]
     assert "TakeOrdered" in kmv
     assert _global_window_nodes(kmv) == []
 
